@@ -33,11 +33,6 @@ def main() -> None:
     ap.add_argument("--segments", type=int, default=4)
     ap.add_argument("--source", default=None)
     ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--engine", choices=("arrow", "jvm"), default="arrow",
-                    help="analyzer engine: arrow (default, unicode-parity "
-                         "Python chain) or jvm (whole-stage-codegen path, "
-                         "no Python workers needed on executors; bit-exact "
-                         "on ASCII corpora — tests/test_jvm_analyzer.py)")
     args = ap.parse_args()
 
     spark = (
@@ -73,7 +68,6 @@ def main() -> None:
         n_segments=args.segments,
         doc_count=n,
         resume=not args.no_resume,
-        analyzer_engine=args.engine,
     )
     wall = time.perf_counter() - t0
     print(

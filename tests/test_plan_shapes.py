@@ -77,6 +77,35 @@ def test_phrase_wand_reads_positions_but_still_prunes(six):
     assert re.search(r"In\(term, \[hash,join\]", p)
 
 
+def test_segment_build_is_one_python_pass_without_exchange(
+        spark, corpus, tmp_path_factory):
+    """A segment's write job (the frame build_segments writes) scans its
+    doc range and inverts it in ONE mapInArrow: no Exchange (no postings
+    shuffle, no sort) and no other Python node between the scan and the
+    block rows."""
+    from whoosh_spark.indexing.segments import BUILD_DOC_CHUNK, _invert_range
+
+    src = str(tmp_path_factory.mktemp("plandocs") / "docs.parquet")
+    corpus.write.parquet(src)
+    docs = spark.read.parquet(src)
+    n = corpus.count()
+    p = _plan(_invert_range(docs, transcript_schema(), 0, n // 2,
+                            BUILD_DOC_CHUNK))
+    assert "Exchange" not in p
+    assert "Sort" not in p
+    assert p.count("MapInArrow") == 1
+    assert not re.search(r"ArrowEvalPython|BatchEvalPython|MapInPandas", p)
+    # the Python map reads the range-filtered docs scan directly: only
+    # narrow JVM nodes between it and the (range-pushed) Parquet scan
+    lines = p.splitlines()
+    top = next(i for i, ln in enumerate(lines) if "MapInArrow" in ln)
+    below = [re.match(r"\s*(?:\+-\s*)?(?:\*\(\d+\)\s*)?(\w+)", ln).group(1)
+             for ln in lines[top + 1:]]
+    assert below[-1] == "FileScan"
+    assert set(below[:-1]) <= {"Coalesce", "Project", "Filter", "ColumnarToRow"}
+    assert "GreaterThanOrEqual(doc_id,0)" in p
+
+
 def test_executor_topk_is_take_ordered_not_global_sort(six):
     s = Searcher(six)
     q = Q.Or([Q.Term("text", "merge"), Q.Term("text", "window")])

@@ -310,3 +310,30 @@ def test_translate_facet(searcher):
     assert [r["k"] for r in out_r] == sorted(ks, reverse=True)
     inh = TranslateFacet(lambda c: c % 3, FieldFacet("n", reverse=True), name="k")
     assert inh.reverse is True
+
+
+def test_unnamed_computed_facets_keep_raw_columns_and_leak_no_slots(searcher):
+    """An unnamed computed key (TranslateFacet, ScoreFacet) sorts
+    through a positional slot: the raw doc column keeps its value
+    and no ``_sk{i}`` column reaches the result schema — in search() and
+    in sorted partials alike. Plain FieldFacet keys keep their name."""
+    from whoosh_spark.search.facets import TranslateFacet
+
+    q = Q.Term("text", "spark")
+    tf = TranslateFacet(lambda c: c % 3, FieldFacet("n"))
+    df = searcher.search(q, sortedby=[tf, ScoreFacet(), FieldFacet("role")],
+                         limit=None)
+    assert not [c for c in df.columns if c.startswith("_sk")]
+    assert "role" in df.columns
+    out = df.collect()
+    raw = {d["doc_id"]: d["n"] for d in DOCS if "spark" in d["text"].split()}
+    assert {r["doc_id"]: r["n"] for r in out} == raw  # untranslated values
+    keys = [(r["n"] % 3, -r["score"], r["role"], r["doc_id"]) for r in out]
+    assert keys == sorted(keys)
+
+    part = searcher.search_with_time_limit(q, timelimit=120.0, limit=3,
+                                           use_partials=True,
+                                           sortedby=[tf, ScoreFacet()])
+    assert part.partial is False
+    assert [r["doc_id"] for r in part] == [r["doc_id"] for r in out[:3]]
+    assert all(not k.startswith("_sk") for r in part for k in r.asDict())

@@ -285,8 +285,7 @@ def test_search_many_optimize_routes_batched_wand(six):
 def test_parallelism_invariance(spark, corpus, tmp_path_factory, six):
     """mpwriter analogue: different segment counts -> identical search."""
     path2 = str(tmp_path_factory.mktemp("segix2") / "ix")
-    build_segments(spark, corpus, transcript_schema(), path2, n_segments=1,
-                   pack_partitions=5)
+    build_segments(spark, corpus, transcript_schema(), path2, n_segments=1)
     six_1 = open_segments(spark, path2, corpus, transcript_schema())
     q = Q.Or([Q.Term("text", "spark"), Q.Term("text", "join")])
     assert (Searcher(six_1).search(q, optimize=False).collect()
@@ -565,3 +564,194 @@ def test_wand_many_doc_range_matches_serial(spark, six):
             want.add((q, r.doc_id, r.score))
     assert got == want and len(got) == 15
     assert all(rng[0] <= d < rng[1] for _, d, _ in got)
+
+
+def _all_kinds_schema():
+    from whoosh_spark.analysis import AnalyzerSpec
+    from whoosh_spark.fields import (BOOLEAN, ID, KEYWORD, MULTILANG_TEXT,
+                                     NUMERIC, TEXT, Schema)
+
+    return Schema(
+        ID("conv_id"),
+        NUMERIC("turn_idx"),
+        TEXT("text"),
+        MULTILANG_TEXT("body", lang_col="lang", default="en"),
+        TEXT("title", field_boost=1.5),
+        TEXT("tagged", analyzer=AnalyzerSpec(
+            pattern=r"[^ \t\r\n]+", stoplist=None, minsize=1,
+            delimited_boost="^")),
+        ID("lang"),
+        BOOLEAN("flag"),
+        KEYWORD("tags"),
+    )
+
+
+def _all_kinds_rows(n=240, seed=5):
+    """Rows exercising every indexed field kind, with NULLs, empty
+    strings, repeated keywords, stopwords, unknown languages and
+    binary-exact delimited boosts."""
+    rng = np.random.default_rng(seed)
+    words = np.array(["spark", "join", "the", "merge", "a", "window",
+                      "hash", "laufen", "parler", "walking", "stream"])
+    langs = ["en", "de", "fr", "zz", None]
+    rows = []
+    for i in range(n):
+        w = rng.choice(words, size=int(rng.integers(0, 9)))
+        tags = " ".join(rng.choice(["x", "y", "zz", "x"], size=int(rng.integers(0, 5))))
+        rows.append((
+            None if i % 17 == 0 else ("" if i % 13 == 0 else f"c{i // 4}"),
+            i % 4,
+            " ".join(w),
+            " ".join(rng.permutation(w)),
+            langs[i % len(langs)],
+            " ".join(w[:3]),
+            " ".join(f"{t}^{b}" for t, b in zip(w, ["2", "0.5", "1.25"] * 3)),
+            None if i % 7 == 0 else bool(i % 3),
+            None if i % 11 == 0 else ("  " + tags if i % 5 == 0 else tags),
+        ))
+    return rows
+
+
+_ALL_KINDS_DDL = ("conv_id string, turn_idx long, text string, body string, "
+                  "lang string, title string, tagged string, flag boolean, "
+                  "tags string")
+
+
+def _sorted_postings(ix):
+    pdf = ix.postings.orderBy("field", "term", "doc_id").toPandas()
+    pdf["positions"] = [None if p is None else list(p) for p in pdf["positions"]]
+    pdf["dl"] = pdf["dl"].astype("float64")
+    return pdf
+
+
+@pytest.mark.parametrize("doc_chunk", [None, 50])
+def test_segments_equal_build_index_every_field_kind(spark, tmp_path, doc_chunk):
+    """The in-task inverter and build_index share one postings producer:
+    decoded segment postings (weights, positions, dl) and term stats
+    equal build_index's for TEXT, MULTILANG_TEXT, ID, BOOLEAN, KEYWORD,
+    a field_boost and a delimited-boost analyzer — with one doc chunk per
+    segment and with many."""
+    schema = _all_kinds_schema()
+    rows = _all_kinds_rows()
+    docs = spark.createDataFrame(
+        [(i, *r) for i, r in enumerate(rows)], "doc_id long, " + _ALL_KINDS_DDL
+    ).persist()
+    path = str(tmp_path / "ix")
+    kw = {} if doc_chunk is None else {"doc_chunk": doc_chunk}
+    man = build_segments(spark, docs, schema, path, n_segments=3, **kw)
+    six = open_segments(spark, path, docs, schema)
+    lix = build_index(spark, docs, schema)
+
+    a, b = _sorted_postings(six), _sorted_postings(lix)
+    assert set(b["field"]) == {"conv_id", "text", "body", "title", "tagged",
+                               "lang", "flag", "tags"}
+    assert len(a) == len(b)
+    for col in ("field", "term", "doc_id", "weight", "positions"):
+        assert a[col].tolist() == b[col].tolist(), col
+    assert a["dl"].fillna(-1).tolist() == b["dl"].fillna(-1).tolist()
+    # the cases the kinds exist for actually occur
+    assert (b.loc[b["field"] == "tags", "weight"] > 1).any()
+    assert (b.loc[b["field"] == "tagged", "weight"] % 1 != 0).any()
+    assert (b.loc[b["field"] == "title", "weight"] == 1.5).any()
+
+    cols = ["field", "term", "df", "total_weight", "max_weight", "min_doc", "max_doc"]
+    sa = six.terms.select(*cols).orderBy("field", "term").toPandas()
+    sb = lix.terms.select(*cols).orderBy("field", "term").toPandas()
+    assert sa.astype({"max_weight": float}).values.tolist() == \
+        sb.astype({"max_weight": float}).values.tolist()
+    # manifest counts, whichever way a segment's terms were counted
+    per_seg = six.blocks.groupBy("segment_id").agg(
+        F.count_distinct("field", "term").alias("t"), F.sum("n").alias("p"),
+        F.count("*").alias("b")).collect()
+    assert {r["segment_id"]: (r["t"], r["p"], r["b"]) for r in per_seg} == {
+        s: (m["n_terms"], m["n_postings"], m["n_blocks"]) for s, m in man.items()}
+    docs.unpersist()
+
+
+def test_append_batch_round_trips_postings(spark, tmp_path):
+    """append_batch writes its segment through the same inverter: the
+    decoded postings and term stats of the streamed segment equal
+    build_index over the stored (doc-id-assigned) batch."""
+    from whoosh_spark.streaming.incremental import IncrementalIndexer
+
+    schema = _all_kinds_schema()
+    batch = spark.createDataFrame(_all_kinds_rows(n=120, seed=9), _ALL_KINDS_DDL)
+    ixer = IncrementalIndexer(spark, str(tmp_path / "ix"), schema)
+    ixer.append_batch(batch, 0)
+    stored = ixer.stored_docs().persist()
+    six = open_segments(spark, ixer.path, stored, schema)
+    lix = build_index(spark, stored, schema)
+    a, b = _sorted_postings(six), _sorted_postings(lix)
+    assert len(a) == len(b) > 0
+    for col in ("field", "term", "doc_id", "weight", "positions"):
+        assert a[col].tolist() == b[col].tolist(), col
+    assert a["dl"].fillna(-1).tolist() == b["dl"].fillna(-1).tolist()
+    sa = six.terms.select("field", "term", "df", "total_weight").orderBy(
+        "field", "term").toPandas()
+    sb = lix.terms.select("field", "term", "df", "total_weight").orderBy(
+        "field", "term").toPandas()
+    assert sa.values.tolist() == sb.values.tolist()
+    stored.unpersist()
+
+
+def test_many_term_lookups_do_not_overflow(six, lix):
+    """prefetch_stats / pairs_postings over 2,500 distinct (field, term)
+    pairs: the lookup predicate is one term IN-list per field, not an OR
+    chain of one equality per term (which overflowed the JVM stack)."""
+    real = [r["term"] for r in lix.terms.where(F.col("field") == "text")
+            .orderBy("term").limit(400).collect()]
+    pairs = ([("text", t) for t in real] + [("role", "user")]
+             + [("text", f"zz{i:05d}") for i in range(2100)])
+    assert len(set(pairs)) >= 2000
+    for ix in (six, lix):
+        ix._lexicon_cache = None
+        ix.prefetch_stats(pairs)
+        cache = ix._stats_cache()
+        assert cache[("text", "zz00007")] == (0, 0.0)
+        exp = {(r["field"], r["term"]): (int(r["df"]), float(r["total_weight"]))
+               for r in lix.terms.where(
+                   (F.col("field") == "text") & F.col("term").isin(real)).collect()}
+        assert {p: cache[p] for p in exp} == exp
+        assert cache[("role", "user")][0] > 0
+        got = ix.pairs_postings(pairs).groupBy("field").count().collect()
+        n_text = sum(d for d, _ in exp.values())
+        assert {r["field"]: r["count"] for r in got} == {
+            "text": n_text, "role": cache[("role", "user")][0]}
+
+
+def test_pack_partition_matches_per_block_loop(lix):
+    """The packer builds each binary column from one buffer + block
+    offsets; a plain per-block loop over the sorted postings is the
+    reference for every byte, positional and non-positional blocks
+    alike."""
+    import pyarrow as pa
+
+    from whoosh_spark.indexing.segments import _pack_partition
+    from whoosh_spark.util import varint_encode_lengths
+
+    pdf = lix.postings.orderBy("field", "term", "doc_id").toPandas()
+    tbl = pa.Table.from_pandas(pdf, preserve_index=False)
+    out = pa.Table.from_batches(list(_pack_partition(iter(tbl.to_batches(1000)))))
+    got = out.to_pylist()
+    i = 0
+    for blk in got:
+        rows = pdf.iloc[i:i + blk["n"]]
+        i += blk["n"]
+        assert {blk["field"]} == set(rows["field"]) and {blk["term"]} == set(rows["term"])
+        doc = rows["doc_id"].to_numpy()
+        deltas = np.diff(doc, prepend=0)
+        deltas[0] = doc[0]
+        assert blk["doc_deltas"] == varint_encode_lengths(deltas)[0]
+        assert blk["weights"] == rows["weight"].to_numpy(np.float32).tobytes()
+        dl = np.minimum(rows["dl"].fillna(0).to_numpy(np.int64), 65535)
+        assert blk["dls"] == dl.astype(np.uint16).tobytes()
+        pos = [list(p) if p is not None else [] for p in rows["positions"]]
+        if any(pos):
+            counts = np.array([len(p) for p in pos], dtype=np.uint16)
+            assert blk["pos_counts"] == counts.tobytes()
+            flat = np.array([v for p in pos for v in p], dtype=np.int64)
+            assert blk["pos_vals"] == varint_encode_lengths(flat)[0]
+        else:
+            assert blk["pos_counts"] is None and blk["pos_vals"] is None
+    assert i == len(pdf)
+    assert {b["pos_vals"] is None for b in got} == {True, False}

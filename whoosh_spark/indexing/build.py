@@ -4,12 +4,14 @@ Spark-first re-expression of the reference write path
 (src/whoosh/writing.py::SegmentWriter.add_document ~L600 ->
 externalsort.py::SortingPool -> codec/whoosh3.py::W3FieldWriter):
 
-- The analyzer chain runs as a **vectorized pandas stage inside
-  ``mapInPandas``** and emits postings *already aggregated per (doc, term)*
-  — i.e. map-side combine happens in the Arrow batch, so the exploded
-  token stream never hits a (doc_id, term) shuffle. The only wide stage in
-  a build is the groupBy(field, term) for the term-stats table (and an
-  optional term-bucket repartition when persisting the physical index).
+- The analyzer chain runs as a **vectorized stage inside ONE
+  ``mapInArrow``** over every indexed field and emits postings *already
+  aggregated per (doc, term)* — i.e. map-side combine happens in the Arrow
+  batch, so the exploded token stream never hits a (doc_id, term)
+  shuffle. The only wide stage in a build is the groupBy(field, term) for
+  the term-stats table. The same per-batch producer feeds the physical
+  segment inverter (indexing/segments.py), which never turns postings
+  into Spark rows at all.
 - Doc lengths are **denormalized into each posting row** (``dl`` = the
   byte-quantized-then-decoded token count the reference scorer uses, see
   util.length_to_byte). Whoosh looks lengths up per doc at score time; at
@@ -21,8 +23,8 @@ externalsort.py::SortingPool -> codec/whoosh3.py::W3FieldWriter):
 Scale notes: the per-(field,term) stats aggregation benefits from Spark's
 partial aggregation; zipfian hot terms skew the *stats* reducer only (a few
 longs per term), not the postings themselves, which stay doc-partitioned
-until the physical layout stage (see indexing/segments.py for the salted
-term shuffle + hot-term block splitting).
+(see indexing/segments.py for the per-segment inversion and the salted
+term shuffle + hot-term block splitting of merges).
 """
 
 from __future__ import annotations
@@ -33,7 +35,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -68,10 +70,19 @@ def _postings_arrow_schema():
     )
 
 
+def _name_column(name: str, n: int) -> "pa.Array":
+    """The constant ``field`` column of one field's postings batch."""
+    import pyarrow as pa
+
+    return pa.DictionaryArray.from_arrays(
+        pa.array(np.zeros(n, dtype=np.int32)), pa.array([name])
+    ).cast(pa.string())
+
+
 def _postings_record_batch(texts, doc_ids, spec, name, boost, arrow_schema):
-    """Analyze one batch slice and emit its postings RecordBatch (None if
-    it produced no postings) — the ONE body shared by the single-spec and
-    the language-routed generators, so the two build paths cannot drift.
+    """Analyze one TEXT batch slice and emit its postings RecordBatch
+    (None if it produced no postings) — the ONE body shared by single-spec
+    and language-routed fields (see :func:`_postings_producer`).
 
     Emits per-(doc, term) rows with tf weights, renumbered positions and
     the quantized doc length. Everything stays in numpy/Arrow — the
@@ -92,9 +103,7 @@ def _postings_record_batch(texts, doc_ids, spec, name, boost, arrow_schema):
     n = len(arrs)
     return pa.RecordBatch.from_arrays(
         [
-            pa.DictionaryArray.from_arrays(
-                pa.array(np.zeros(n, dtype=np.int32)), pa.array([name])
-            ).cast(pa.string()),
+            _name_column(name, n),
             pa.array(arrs.term, type=pa.string()),
             pa.array(doc_ids[arrs.row], type=pa.int64()),
             pa.array(arrs.weight * boost if boost != 1.0 else arrs.weight),
@@ -108,57 +117,39 @@ def _postings_record_batch(texts, doc_ids, spec, name, boost, arrow_schema):
     )
 
 
-def _text_postings_generator(field_spec: FieldSpec, doc_id_col: str):
-    """Build the mapInArrow function for one TEXT field (see
-    :func:`_postings_record_batch` for the emit contract)."""
-    import pyarrow as pa
-
-    name = field_spec.name
-    spec = field_spec.analyzer
-    boost = float(field_spec.field_boost)
-    arrow_schema = _postings_arrow_schema()
-
-    def gen(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            texts = batch.column(batch.schema.get_field_index(name)).to_pandas()
-            doc_ids = batch.column(batch.schema.get_field_index(doc_id_col)).to_numpy(
-                zero_copy_only=False
-            )
-            rb = _postings_record_batch(texts, doc_ids, spec, name, boost,
-                                        arrow_schema)
-            if rb is not None:
-                yield rb
-
-    return gen
+def _postings_source(docs: DataFrame, schema: Schema, doc_id_col: str) -> DataFrame:
+    """The JVM projection every postings producer reads: ``doc_id`` (long)
+    plus one positional column per indexed field — TEXT values as-is (and
+    a MULTILANG field's language column), ID/BOOLEAN values
+    ``cast("string")``, KEYWORD values ``split`` on whitespace. Positional
+    names (``_f{i}``, ``_l{i}``) keep a field named like another field's
+    language column, or like ``doc_id``, from colliding."""
+    cols = [F.col(doc_id_col).cast("long").alias("doc_id")]
+    for i, fs in enumerate(schema.indexed_fields()):
+        if fs.kind == "text":
+            cols.append(F.col(fs.name).alias(f"_f{i}"))
+            if fs.lang_col:
+                cols.append(F.col(fs.lang_col).alias(f"_l{i}"))
+        elif fs.kind == "keyword":
+            cols.append(F.split(F.col(fs.name).cast("string"), r"\s+").alias(f"_f{i}"))
+        else:  # id / boolean
+            cols.append(F.col(fs.name).cast("string").alias(f"_f{i}"))
+    return docs.select(*cols)
 
 
-def _text_postings_generator_multilang(field_spec: FieldSpec, doc_id_col: str):
-    """mapInArrow function for a MULTILANG_TEXT field: per-row analyzer
-    routing on the field's language column (fields.py::MULTILANG_TEXT).
-
-    Rows are grouped by language value INSIDE each Arrow batch and each
-    group runs the same vectorized kernel with its language's spec — one
-    sub-batch per (batch, language), no per-language scan, no shuffle
-    beyond the plain TEXT build's. Unknown / NULL / unbundled languages
-    fall back to the field's default spec (never a mid-build raise: a
-    web-scale corpus always carries codes you did not plan for). Spec
-    resolution is memoized per worker; each language's stemmer keeps its
-    own LRU via analysis._stemmer_for.
-    """
-    import pyarrow as pa
-
-    name = field_spec.name
-    lang_col = field_spec.lang_col
+def _multilang_spec_for(field_spec: FieldSpec):
+    """Language value -> AnalyzerSpec for a MULTILANG_TEXT field
+    (fields.py::MULTILANG_TEXT), memoized per worker. Unknown / NULL /
+    unbundled languages fall back to the field's default spec (never a
+    mid-build raise: a web-scale corpus always carries codes you did not
+    plan for); each language's stemmer keeps its own LRU via
+    analysis._stemmer_for."""
     default_spec = field_spec.analyzer
-    boost = float(field_spec.field_boost)
     explicit = (dict(field_spec.lang_specs)
                 if field_spec.lang_specs is not None else None)
-    arrow_schema = _postings_arrow_schema()
     memo: dict = {}
 
-    def _spec_for(lang: str):
+    def spec_for(lang: str):
         sp = memo.get(lang)
         if sp is None:
             if explicit is not None:
@@ -173,140 +164,115 @@ def _text_postings_generator_multilang(field_spec: FieldSpec, doc_id_col: str):
             memo[lang] = sp
         return sp
 
-    def gen(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            texts = batch.column(batch.schema.get_field_index(name)).to_pandas()
-            doc_ids = batch.column(batch.schema.get_field_index(doc_id_col)).to_numpy(
-                zero_copy_only=False
-            )
-            langs = (
-                batch.column(batch.schema.get_field_index(lang_col))
-                .to_pandas().fillna("").astype(str)
-            )
-            for lv in sorted(langs.unique()):
-                mask = (langs == lv).to_numpy()
-                rb = _postings_record_batch(
-                    texts[mask].reset_index(drop=True), doc_ids[mask],
-                    _spec_for(lv), name, boost, arrow_schema,
-                )
-                if rb is not None:
-                    yield rb
-
-    return gen
+    return spec_for
 
 
-def _jvm_analyzer_eligible(spec) -> bool:
-    """True when the analyzer chain is the plain tokenize → lowercase →
-    stop/minsize → renumber shape with every advanced stage off — the
-    shape the JVM fast path reproduces exactly (for ASCII text)."""
-    from whoosh_spark.analysis import AnalyzerSpec
+def _untokenized_record_batch(name, terms, doc_ids, weights, arrow_schema):
+    """Postings of a non-positional field (ID/BOOLEAN/KEYWORD): null
+    positions and null dl."""
+    import pyarrow as pa
 
-    plain = AnalyzerSpec(
-        pattern=spec.pattern, lowercase=spec.lowercase,
-        stoplist=spec.stoplist, minsize=spec.minsize, maxsize=spec.maxsize,
+    n = len(terms)
+    return pa.RecordBatch.from_arrays(
+        [
+            _name_column(name, n),
+            pa.array(terms, type=pa.string()),
+            pa.array(doc_ids, type=pa.int64()),
+            pa.array(weights, type=pa.float64()),
+            pa.nulls(n, pa.list_(pa.int32())),
+            pa.nulls(n, pa.int64()),
+        ],
+        schema=arrow_schema,
     )
-    return spec == plain and spec.lowercase
 
 
-def _text_postings_jvm(field_spec: FieldSpec, doc_id_col: str, docs: DataFrame) -> DataFrame:
-    """Pure-JVM postings for a plain-chain TEXT field
-    (``build_index(analyzer_engine="jvm")``).
+def _postings_producer(schema: Schema):
+    """Per-batch postings producer over :func:`_postings_source` batches:
+    ``produce(batch)`` yields one postings RecordBatch (POSTINGS_SCHEMA)
+    per indexed field that produced any. The ONE definition of a posting,
+    shared by :func:`build_index` and the segment inverter
+    (segments.py), so the logical and the physical builders cannot drift.
 
-    Same output contract as :func:`_text_postings_generator` and pinned
-    EXACTLY equal to it on ASCII corpora (tests/test_jvm_analyzer.py):
-    per-(doc, term) rows, renumbered positions, byte-quantized dl
-    (``F.bround`` = numpy rint's HALF_EVEN; equality exhaustive over the
-    full 0..68000 length domain).
-
-    Shape: tokenize/filter in whole-stage codegen, posexplode, then ONE
-    (doc_id, term) hash aggregate (count + sort_array(collect_list(pos))
-    — ObjectHashAggregate combines map-side, so the exchange carries
-    posting rows, not raw tokens). Measured A/B at 2M turns local[32],
-    warm: the tokenize+combine stage alone runs 2.1 s vs 4.5 s Arrow,
-    but END-TO-END build incl. the shared terms-stats aggregate lands at
-    PARITY (4.2–4.8 s vs 4.5–4.6 s — within host variance; BENCH.md).
-    Two candidate JVM shapes were measured and the all-HOF zero-shuffle
-    variant LOST by 4× (20 s: per-element lambda evaluation beats
-    codegen out of the plan), so this one ships. What the engine buys is
-    therefore not single-box speed: (a) executors need NO Python
-    workers (a pyspark-less serving/ingest tier can build), and (b) a
-    fully independent reimplementation of the analyzer that is pinned
-    BIT-EXACT against the Python chain — a standing cross-validation of
-    the tokenizer/stoplist/renumber/quantize semantics. Trade-off: the
-    Arrow build has NO wide stage at all, while this path shuffles the
-    postings once — on a network-bound cluster that exchange is the
-    bottleneck the default avoids, so Arrow stays the default.
-
-    ASCII caveat (the other reason it's opt-in): JVM ``lower()`` and
-    Java regex ``\\w`` differ from Python ``str.lower()``/``re`` on
-    unicode edges (dotted İ, ß, non-Latin word chars). The default
-    engine keeps the Python chain per SURVEY's unicode-parity note.
+    - TEXT: :func:`_postings_record_batch`. A MULTILANG_TEXT field groups
+      the batch's rows by language value and runs the same kernel once
+      per language with that language's spec — no per-language scan.
+    - ID/BOOLEAN: one posting of weight 1.0 per non-null, non-empty value.
+    - KEYWORD: whitespace-split terms (empty pieces dropped), weight = the
+      term's occurrence count in the doc.
     """
-    import math as _math
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    from whoosh_spark.util import BYTE_TO_LENGTH
+    arrow_schema = _postings_arrow_schema()
+    fields = []
+    for i, fs in enumerate(schema.indexed_fields()):
+        spec_for = (_multilang_spec_for(fs)
+                    if fs.kind == "text" and fs.lang_col else None)
+        fields.append((i, fs, float(fs.field_boost), spec_for))
 
-    name = field_spec.name
-    spec = field_spec.analyzer
-    boost = float(field_spec.field_boost)
-    ln_base = _math.log(1.0325)
+    def produce(batch: "pa.RecordBatch") -> Iterator["pa.RecordBatch"]:
+        doc_ids = batch.column(0).to_numpy(zero_copy_only=False)
+        for i, fs, boost, spec_for in fields:
+            col = batch.column(batch.schema.get_field_index(f"_f{i}"))
+            if fs.kind == "text":
+                texts = col.to_pandas()
+                if spec_for is None:
+                    rb = _postings_record_batch(texts, doc_ids, fs.analyzer,
+                                                fs.name, boost, arrow_schema)
+                    if rb is not None:
+                        yield rb
+                    continue
+                langs = (batch.column(batch.schema.get_field_index(f"_l{i}"))
+                         .to_pandas().fillna("").astype(str))
+                for lv in sorted(langs.unique()):
+                    mask = (langs == lv).to_numpy()
+                    rb = _postings_record_batch(
+                        texts[mask].reset_index(drop=True), doc_ids[mask],
+                        spec_for(lv), fs.name, boost, arrow_schema)
+                    if rb is not None:
+                        yield rb
+            elif fs.kind == "keyword":
+                rows = pc.list_parent_indices(col).to_numpy(zero_copy_only=False)
+                vals = col.flatten()
+                keep = pc.fill_null(pc.not_equal(vals, ""), False)
+                rows = rows[keep.to_numpy(zero_copy_only=False)]
+                if rows.size == 0:
+                    continue
+                codes, uniques = pd.factorize(
+                    np.asarray(vals.filter(keep).to_pandas(), dtype=object))
+                key, counts = np.unique(rows * len(uniques) + codes,
+                                        return_counts=True)
+                yield _untokenized_record_batch(
+                    fs.name, np.asarray(uniques, dtype=object)[key % len(uniques)],
+                    doc_ids[key // len(uniques)], counts.astype(np.float64),
+                    arrow_schema)
+            else:  # id / boolean
+                keep = pc.fill_null(pc.not_equal(col, ""), False)
+                n = pc.sum(keep).as_py() or 0
+                if n == 0:
+                    continue
+                yield _untokenized_record_batch(
+                    fs.name, col.filter(keep),
+                    doc_ids[keep.to_numpy(zero_copy_only=False)],
+                    np.ones(n), arrow_schema)
 
-    toks = F.regexp_extract_all(F.lower(F.col(name)), F.lit(spec.pattern), 0)
-    stop = sorted(spec.stoplist) if spec.stoplist else []
+    return produce
 
-    def _keep(t):
-        cond = F.length(t) >= F.lit(int(spec.minsize))
-        if spec.maxsize is not None:
-            cond = cond & (F.length(t) <= F.lit(int(spec.maxsize)))
-        if stop:
-            cond = cond & ~t.isin(*stop)
-        return cond
 
-    kept = F.filter(toks, _keep)
-    raw_len = F.size(kept)
-    # length_to_byte: bround(ln(len/8+1)/ln(1.0325)) clamped [0, 255],
-    # 0 for empty, 255 from 68000 — then decode through the exact table
-    byte = F.when(raw_len <= 0, F.lit(0)).when(
-        raw_len >= 68000, F.lit(255)
-    ).otherwise(
-        F.least(
-            F.lit(255),
-            F.bround(
-                F.log(raw_len.cast("double") / F.lit(8.0) + F.lit(1.0))
-                / F.lit(ln_base)
-            ).cast("int"),
-        )
-    )
-    dl = F.element_at(
-        F.array(*[F.lit(int(v)) for v in BYTE_TO_LENGTH]), byte + 1
-    ).cast("long")
-
-    ex = docs.select(
-        F.col(doc_id_col).cast("long").alias("doc_id"),
-        dl.alias("_dl"),
-        F.posexplode(kept).alias("_p", "_term"),
-    )
-    weight = F.count("*").cast("double")
-    if boost != 1.0:
-        weight = weight * F.lit(boost)
-    return (
-        ex.groupBy("doc_id", "_term")
-        .agg(
-            weight.alias("weight"),
-            F.sort_array(F.collect_list("_p")).alias("positions"),
-            F.first("_dl").alias("dl"),
-        )
-        .select(
-            F.lit(name).alias("field"),
-            F.col("_term").alias("term"),
-            "doc_id",
-            "weight",
-            "positions",
-            "dl",
-        )
-    )
+def pairs_filter(pairs: "list[tuple[str, str]]") -> Column:
+    """Predicate matching any of the given (field, term) pairs: one
+    ``field = f AND term IN (...)`` per distinct field. The expression
+    depth grows with the number of fields, not terms — a chain of one
+    equality per term overflows the JVM stack when Catalyst walks it
+    (a 1000-rule percolation batch holds thousands of terms)."""
+    by_field: dict[str, list[str]] = {}
+    for f, t in pairs:
+        by_field.setdefault(f, []).append(t)
+    cond = None
+    for f, terms in by_field.items():
+        c = (F.col("field") == f) & F.col("term").isin(list(dict.fromkeys(terms)))
+        cond = c if cond is None else cond | c
+    return cond
 
 
 @dataclass
@@ -444,14 +410,8 @@ class InvertedIndex:
         todo = [k for k in dict.fromkeys(tuple(p) for p in pairs) if k not in cache]
         if not todo:
             return
-        from functools import reduce
-
-        cond = reduce(
-            lambda a, b: a | b,
-            [((F.col("field") == f) & (F.col("term") == t)) for f, t in todo],
-        )
         rows = (
-            self.terms.where(cond)
+            self.terms.where(pairs_filter(todo))
             .select("field", "term", "df", "total_weight")
             .collect()
         )
@@ -582,13 +542,7 @@ class InvertedIndex:
         )
 
     def pairs_postings(self, pairs: list[tuple[str, str]]) -> DataFrame:
-        from functools import reduce
-
-        cond = reduce(
-            lambda a, b: a | b,
-            [((F.col("field") == f) & (F.col("term") == t)) for f, t in pairs],
-        )
-        return self.postings.where(cond)
+        return self.postings.where(pairs_filter(pairs))
 
     def terms_df_postings(self, fieldname: str, terms_df: DataFrame) -> DataFrame:
         """Postings for every (fieldname, t) where t comes from a DataFrame
@@ -628,12 +582,15 @@ def build_index(
     schema: Schema,
     doc_id_col: str = "doc_id",
     materialize: bool = True,
-    analyzer_engine: str = "arrow",
 ) -> InvertedIndex:
     """Build the logical inverted index from a docs DataFrame.
 
     ``docs`` must already carry a dense ``doc_id`` (use
     indexing.docids.assign_doc_ids for the transcript parity ordering).
+
+    Postings come from ONE mapInArrow over the column-pruned docs scan:
+    every indexed field of a batch runs through the shared per-batch
+    producer (:func:`_postings_producer`), so n fields never cost n scans.
 
     With ``materialize`` (default), the postings frame is cached so the
     analyzer chain runs exactly ONCE — the terms stats, field totals and
@@ -643,78 +600,15 @@ def build_index(
     use the block cache.) Pass ``materialize=False`` to keep the build fully
     lazy, e.g. when immediately handing postings to a streaming sink.
     """
-    if analyzer_engine not in ("arrow", "jvm"):
-        raise ValueError(f"analyzer_engine must be 'arrow' or 'jvm', got {analyzer_engine!r}")
-    parts: list[DataFrame] = []
-    for fs in schema.text_fields():
-        if fs.lang_col:
-            # MULTILANG_TEXT: per-row analyzer routing — needs the lang
-            # column in the batch; the JVM engine can't express per-row
-            # dispatch, so routed fields always take the Arrow path
-            src = docs.select(doc_id_col, fs.name, fs.lang_col)
-            parts.append(src.mapInArrow(
-                _text_postings_generator_multilang(fs, doc_id_col),
-                POSTINGS_SCHEMA))
-            continue
-        src = docs.select(doc_id_col, fs.name)
-        if analyzer_engine == "jvm":
-            # opt-in whole-stage-codegen path (ASCII parity; see
-            # _text_postings_jvm docstring). Fields whose chain the JVM
-            # path can't express keep the Arrow engine — mixing engines
-            # per field is fine, the output contract is identical.
-            if _jvm_analyzer_eligible(fs.analyzer):
-                parts.append(_text_postings_jvm(fs, doc_id_col, docs))
-                continue
-        parts.append(src.mapInArrow(_text_postings_generator(fs, doc_id_col), POSTINGS_SCHEMA))
+    produce = _postings_producer(schema)
 
-    # All ID/BOOLEAN fields in ONE scan: per row, an array of (field, term)
-    # structs, exploded once — n fields must not cost n passes over 10^12 rows.
-    id_specs = [fs for fs in schema.indexed_fields() if fs.kind in ("id", "boolean")]
-    if id_specs:
-        entries = F.array(
-            *[
-                F.struct(
-                    F.lit(fs.name).alias("field"),
-                    F.col(fs.name).cast("string").alias("term"),
-                )
-                for fs in id_specs
-            ]
-        )
-        part = (
-            docs.select(F.col(doc_id_col).alias("doc_id"), F.explode(entries).alias("e"))
-            .where(F.col("e.term").isNotNull() & (F.col("e.term") != ""))
-            .select(
-                F.col("e.field").alias("field"),
-                F.col("e.term").alias("term"),
-                "doc_id",
-                F.lit(1.0).alias("weight"),
-                F.lit(None).cast(T.ArrayType(T.IntegerType())).alias("positions"),
-                F.lit(None).cast("long").alias("dl"),
-            )
-        )
-        parts.append(part)
+    def gen(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        for batch in batches:
+            if batch.num_rows:
+                yield from produce(batch)
 
-    for fs in schema.indexed_fields():
-        if fs.kind != "keyword":
-            continue
-        col = F.col(fs.name).cast("string")
-        # space-separated terms, weight 1 each occurrence
-        src = docs.select(
-            F.lit(fs.name).alias("field"),
-            F.explode(F.split(col, r"\s+")).alias("term"),
-            F.col(doc_id_col).alias("doc_id"),
-        ).where(F.col("term") != "")
-        part = (
-            src.groupBy("field", "term", "doc_id")
-            .agg(F.count("*").cast("double").alias("weight"))
-            .withColumn("positions", F.lit(None).cast(T.ArrayType(T.IntegerType())))
-            .withColumn("dl", F.lit(None).cast("long"))
-        )
-        parts.append(part)
-
-    postings = parts[0]
-    for p in parts[1:]:
-        postings = postings.unionByName(p)
+    postings = _postings_source(docs, schema, doc_id_col).mapInArrow(
+        gen, POSTINGS_SCHEMA)
     if materialize:
         postings = postings.persist()
 

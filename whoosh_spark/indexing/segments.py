@@ -11,13 +11,16 @@ generation manifest):
   added between commits, and the MpWriter sub-segment model,
   src/whoosh/multiproc.py::MpWriter ~L150). Queries run per-segment in
   parallel and merge — MultiMatcher with docnum offsets, for free.
-- Within a segment, postings are hash-repartitioned by (field, term),
-  sorted by (field, term, doc_id), and packed into block rows by ONE
-  vectorized mapInArrow pass: doc ids delta+LEB128-varint encoded (PFOR
-  spirit), weights float32, lengths as uint16 of the byte-quantized value,
-  positions as plain varints with uint16 counts. Per-block metadata
-  (max_weight, min_dl, min/max doc) feeds block-max WAND pruning
-  (search/wand.py) and lets the reader skip whole blocks without decoding.
+- A segment is built by ONE task (one per BUILD_DOC_CHUNK range of a
+  larger segment) in ONE mapInArrow pass over its doc range: analyze each
+  docs batch, keep only the postings arrays, then invert in-task — sort
+  by (field, term, doc_id) in numpy/Arrow — and pack into block rows.
+  There is no term shuffle: postings never become Spark rows. Blocks hold
+  doc ids delta+LEB128-varint encoded (PFOR spirit), weights float32,
+  lengths as uint16 of the byte-quantized value, positions as plain
+  varints with uint16 counts. Per-block metadata (max_weight, min_dl,
+  min/max doc) feeds block-max WAND pruning (search/wand.py) and lets the
+  reader skip whole blocks without decoding.
 - The block table is written as Parquet partitioned by segment_id; files
   are sorted by (field, term), so Parquet row-group min/max statistics give
   term-range pruning on read (the analogue of the reference's ordered term
@@ -31,11 +34,10 @@ generation manifest):
   reference's TOC generation swap, src/whoosh/writing.py::SegmentWriter
   .commit ~L800, made per-partition).
 
-At 100 TB: segments bound the skew of any single (field, term) group — a
-term's in-segment postings can't exceed the segment's doc count, so the
-pack groupBy never sees an unbounded hot key; cross-segment merge
-(merge_segments) re-shards hot terms by block group (salted) instead of by
-bare term for the same reason.
+At 100 TB: doc chunks bound the memory of any build task and the skew of
+any single (field, term) group — a term's postings in one task can't
+exceed BUILD_DOC_CHUNK; cross-segment merge (merge_segments) re-shards hot
+terms by block group (salted) instead of by bare term for the same reason.
 """
 
 from __future__ import annotations
@@ -55,7 +57,13 @@ from pyspark.sql import types as T
 
 from whoosh_spark import __version__ as _code_version
 from whoosh_spark.fields import Schema
-from whoosh_spark.indexing.build import POSTINGS_SCHEMA, InvertedIndex, build_index
+from whoosh_spark.indexing.build import (
+    POSTINGS_SCHEMA,
+    InvertedIndex,
+    _postings_producer,
+    _postings_source,
+    pairs_filter,
+)
 from whoosh_spark.util import (
     segmented_cumsum,
     varint_decode,
@@ -74,14 +82,14 @@ BLOCK_SIZE = 128  # reference parity: codec blocklimit (SURVEY A.8)
 STREAM_BASE = 1_000_000
 MERGED_BASE = 2_000_000_000
 
-# Build-time pack shuffle key includes floor(doc_id / BUILD_DOC_CHUNK): a
-# zipfian term that appears in (nearly) every doc of a segment would
-# otherwise land its ENTIRE posting list on one pack task. Chunking bounds
-# any (field, term) group at BUILD_DOC_CHUNK postings while keeping blocks
-# doc-clustered (chunks are contiguous doc ranges); ordinary terms almost
-# always fall in one chunk, so small corpora produce identical layouts.
-# Cross-chunk block ranges of one term may overlap after this split — the
-# WAND refine bound and all readers tolerate that (see search/wand.py).
+# A segment inverts in one task per floor(doc_id / BUILD_DOC_CHUNK) range:
+# the task holds its range's postings in memory, so the chunk bounds task
+# memory and any (field, term) group at BUILD_DOC_CHUNK postings, while
+# keeping blocks doc-clustered (chunks are contiguous doc ranges). A term
+# that spans chunks restarts its blocks at each boundary; segments inside
+# one chunk produce one block run per term. Cross-chunk block ranges of one
+# term may overlap after this split — the WAND refine bound and all readers
+# tolerate that (see search/wand.py).
 BUILD_DOC_CHUNK = 1 << 20
 
 BLOCKS_SCHEMA = T.StructType(
@@ -107,15 +115,32 @@ BLOCKS_SCHEMA = T.StructType(
 # ---------------------------------------------------------------- packing
 
 
+def _binary_column(data: bytes, offsets: np.ndarray,
+                   valid: np.ndarray | None = None) -> "pa.Array":
+    """Binary array whose i-th value is ``data[offsets[i]:offsets[i+1]]``
+    (NULL where ``valid`` is False; those slices must be empty), built
+    from the buffers without copying."""
+    import pyarrow as pa
+
+    n = offsets.size - 1
+    bitmap = None
+    if valid is not None:
+        bitmap = pa.py_buffer(np.packbits(valid, bitorder="little").tobytes())
+    return pa.Array.from_buffers(
+        pa.binary(), n,
+        [bitmap, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(data)],
+        null_count=-1 if valid is None else int(n - valid.sum()))
+
+
 def _pack_partition(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
     """Pack one sorted postings partition into block rows, vectorized.
 
     Input: postings sorted by (field, term, doc_id) within the partition.
-    Groups are hash-partitioned on (field, term, doc-chunk) — a term may
-    span partitions (hot-term bound, see BUILD_DOC_CHUNK), which only
-    yields an extra partial block per boundary, never wrong data. The only
-    Python-level loop is buffer slicing per block; every encode runs once
-    over the whole partition.
+    A term may span partitions (one doc chunk per build task, see
+    BUILD_DOC_CHUNK; salt groups in a merge), which only yields an extra
+    partial block per boundary, never wrong data. Nothing loops per block
+    or per posting in Python: every encode runs once over the whole
+    partition and each binary column is sliced from one buffer.
     """
     import pyarrow as pa
 
@@ -178,27 +203,23 @@ def _pack_partition(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordB
     mindl = np.minimum.reduceat(dl16.astype(np.int64), blk_starts)
     wsum = np.add.reduceat(weight, blk_starts)
 
-    dmv = memoryview(dbuf)
-    w_bytes = w32.tobytes()
-    dl_bytes = dl16.tobytes()
-    doc_deltas_col, weights_col, dls_col = [], [], []
-    pos_counts_col, pos_vals_col = [], []
+    # every binary column is ONE buffer + per-block offsets, built
+    # zero-copy — no per-block Python bytes objects
+    bounds = np.append(blk_starts, n_rows)
+    doc_deltas_col = _binary_column(dbuf, dbyte_off[bounds])
+    weights_col = _binary_column(w32.tobytes(), 4 * bounds)
+    dls_col = _binary_column(dl16.tobytes(), 2 * bounds)
     if has_pos:
-        pmv = memoryview(pbuf)
-        c_bytes = cnt16.tobytes()
-        blk_pos_totals = np.add.reduceat(counts, blk_starts)
-    for i in range(nb):
-        s, e = blk_starts[i], blk_ends[i]
-        doc_deltas_col.append(bytes(dmv[dbyte_off[s] : dbyte_off[e]]))
-        weights_col.append(w_bytes[4 * s : 4 * e])
-        dls_col.append(dl_bytes[2 * s : 2 * e])
-        if has_pos and blk_pos_totals[i] > 0:
-            pos_counts_col.append(c_bytes[2 * s : 2 * e])
-            pos_vals_col.append(bytes(pmv[post_pbytes_off[s] : post_pbytes_off[e]]))
-        else:
-            # non-positional (ID/KEYWORD) blocks store no position payload
-            pos_counts_col.append(None)
-            pos_vals_col.append(None)
+        # non-positional (ID/KEYWORD) blocks store no position payload
+        blk_has = np.add.reduceat(counts, blk_starts) > 0
+        blk_n = blk_ends - blk_starts
+        pos_counts_col = _binary_column(
+            cnt16[np.repeat(blk_has, blk_n)].tobytes(),
+            np.concatenate(([0], np.cumsum(np.where(blk_has, 2 * blk_n, 0)))),
+            blk_has)
+        pos_vals_col = _binary_column(pbuf, post_pbytes_off[bounds], blk_has)
+    else:
+        pos_counts_col = pos_vals_col = pa.nulls(nb, pa.binary())
 
     yield pa.RecordBatch.from_arrays(
         [
@@ -211,14 +232,69 @@ def _pack_partition(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordB
             pa.array(maxw, type=pa.float32()),
             pa.array(mindl.astype(np.int32)),
             pa.array(wsum, type=pa.float64()),
-            pa.array(doc_deltas_col, type=pa.binary()),
-            pa.array(weights_col, type=pa.binary()),
-            pa.array(dls_col, type=pa.binary()),
-            pa.array(pos_counts_col, type=pa.binary()),
-            pa.array(pos_vals_col, type=pa.binary()),
+            doc_deltas_col,
+            weights_col,
+            dls_col,
+            pos_counts_col,
+            pos_vals_col,
         ],
         names=[f.name for f in BLOCKS_SCHEMA.fields],
     )
+
+
+def _inverter(schema: Schema):
+    """mapInArrow function inverting one doc range into block rows.
+
+    Every docs batch runs through the shared postings producer
+    (build._postings_producer — the same rows build_index emits) and only
+    the postings arrays are kept; the docs text is dropped batch by batch.
+    At the end the range's postings are sorted by (field, term, doc_id)
+    and packed by :func:`_pack_partition`, so postings never become Spark
+    rows and never cross the Python/JVM boundary — block rows are the
+    task's only output, in (field, term, block_id) order.
+    """
+    produce = _postings_producer(schema)
+
+    def invert(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        parts = [rb for b in batches if b.num_rows for rb in produce(b)]
+        if not parts:
+            return
+        postings = pa.Table.from_batches(parts)
+        del parts
+        order = pc.sort_indices(postings, sort_keys=[
+            ("field", "ascending"), ("term", "ascending"), ("doc_id", "ascending")])
+        yield from _pack_partition(iter(postings.take(order).to_batches()))
+
+    return invert
+
+
+def _invert_range(docs: DataFrame, schema: Schema, lo: int, hi: int,
+                  doc_chunk: int, doc_id_col: str = "doc_id") -> DataFrame:
+    """Block rows of the docs with ``lo <= doc_id < hi``: one task per
+    BUILD_DOC_CHUNK-aligned piece of the range, each scanning its piece
+    (the range filter pushes into the docs scan) and inverting it in ONE
+    Python pass (:func:`_inverter`). No exchange anywhere — a segment is a
+    doc-range shard, so there is nothing to shuffle by term."""
+    from functools import reduce
+
+    src = _postings_source(docs, schema, doc_id_col)
+    invert = _inverter(schema)
+    return reduce(DataFrame.union, [
+        src.where((F.col("doc_id") >= a) & (F.col("doc_id") < b))
+        .coalesce(1)
+        .mapInArrow(invert, BLOCKS_SCHEMA)
+        for a, b in _chunk_ranges(lo, hi, doc_chunk)
+    ])
+
+
+def _chunk_ranges(lo: int, hi: int, doc_chunk: int) -> list[tuple[int, int]]:
+    """``[lo, hi)`` cut at multiples of ``doc_chunk`` (at least one piece,
+    possibly empty): the doc ranges of a segment's build tasks."""
+    return [(max(lo, c * doc_chunk), min(hi, (c + 1) * doc_chunk))
+            for c in range(lo // doc_chunk, max(lo, hi - 1) // doc_chunk + 1)]
 
 
 # --------------------------------------------------------------- unpacking
@@ -327,11 +403,8 @@ def build_segments(
     n_segments: int = 4,
     doc_count: int | None = None,
     doc_id_col: str = "doc_id",
-    pack_partitions: int | None = None,
     resume: bool = True,
-    max_concurrent: int = 4,
     doc_chunk: int = BUILD_DOC_CHUNK,
-    analyzer_engine: str = "arrow",
 ) -> dict:
     """Build (or resume) the physical segmented index at ``path``.
 
@@ -341,48 +414,46 @@ def build_segments(
     missing segments (north rule: checkpoint-resumable per partition with
     lineage and term/posting count metrics).
 
-    Segments build CONCURRENTLY (``max_concurrent`` driver threads submit
-    independent Spark jobs; the scheduler interleaves their stages): a
-    serial per-segment loop would put the wall-clock floor at
-    n_segments x single-segment time no matter how large the cluster is.
-    Each thread still commits its own manifest atomically, so resume
-    semantics are unchanged under any interleaving of failures.
+    Build parallelism is one task per segment — or one per ``doc_chunk``
+    range of a segment larger than that — like the reference's MpWriter
+    sub-writers (src/whoosh/multiproc.py::MpWriter): each task scans its
+    doc range, analyzes, inverts and packs it in one Python pass
+    (:func:`_invert_range`) and writes its block file; no postings
+    shuffle. Segments build CONCURRENTLY (one driver thread per pending
+    segment, at most ``defaultParallelism``): a serial per-segment loop
+    would put the wall-clock floor at n_segments x single-segment time no
+    matter how large the cluster is. Each thread still commits its own
+    manifest atomically, so resume semantics are unchanged under any
+    interleaving of failures.
     """
     os.makedirs(_manifest_dir(path), exist_ok=True)
     done = _read_manifest(path) if resume else {}
     if doc_count is None:
         doc_count = docs.count()
     per_seg = math.ceil(doc_count / n_segments) if doc_count else 1
-    if pack_partitions is None:
-        pack_partitions = max(spark.sparkContext.defaultParallelism // 2, 2)
 
     def _build_one(seg_id: int) -> tuple[int, dict]:
         lo, hi = seg_id * per_seg, min((seg_id + 1) * per_seg, doc_count)
         t0 = time.perf_counter()
         seg_docs = docs.where((F.col(doc_id_col) >= lo) & (F.col(doc_id_col) < hi))
-        ix = build_index(spark, seg_docs, schema, doc_id_col=doc_id_col,
-                         materialize=False, analyzer_engine=analyzer_engine)
-        packed = (
-            ix.postings.withColumn(
-                "_chunk", (F.col("doc_id") / F.lit(doc_chunk)).cast("long")
-            )
-            .repartition(pack_partitions, "field", "term", "_chunk")
-            .sortWithinPartitions("field", "term", "doc_id")
-            .drop("_chunk")
-            .mapInArrow(_pack_partition, BLOCKS_SCHEMA)
-        )
         seg_path = os.path.join(path, "blocks", f"segment_id={seg_id}")
-        # sort blocks by (field, term) inside files -> Parquet min/max stats
-        # prune term lookups to few row groups (ordered term dict analogue)
-        packed.sortWithinPartitions("field", "term", "block_id").write.mode(
+        # each task's blocks come out sorted by (field, term, block_id), so
+        # Parquet min/max stats prune term lookups to few row groups
+        # (ordered term dict analogue) with no extra sort
+        _invert_range(docs, schema, lo, hi, doc_chunk, doc_id_col).write.mode(
             "overwrite"
         ).parquet(seg_path)
 
-        blocks = spark.read.parquet(seg_path)
-        stats = blocks.agg(
+        # a build task writes one block run per term, starting at block_id
+        # 0: a one-task segment counts its terms without a distinct shuffle
+        if len(_chunk_ranges(lo, hi, doc_chunk)) == 1:
+            n_terms = F.sum((F.col("block_id") == 0).cast("long"))
+        else:
+            n_terms = F.count_distinct("field", "term")
+        stats = spark.read.parquet(seg_path).agg(
             F.sum("n").alias("n_postings"),
             F.count("*").alias("n_blocks"),
-            F.count_distinct("field", "term").alias("n_terms"),
+            n_terms.alias("n_terms"),
         ).collect()[0]
         n_docs_seg = seg_docs.count()
         manifest = {
@@ -410,13 +481,11 @@ def build_segments(
         return seg_id, manifest
 
     pending = [s for s in range(n_segments) if s not in done]
-    if len(pending) <= 1 or max_concurrent <= 1:
-        for s in pending:
-            done.__setitem__(*_build_one(s))
-    else:
+    if pending:
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(min(max_concurrent, len(pending))) as pool:
+        threads = min(len(pending), spark.sparkContext.defaultParallelism)
+        with ThreadPoolExecutor(threads) as pool:
             for seg_id, manifest in pool.map(_build_one, pending):
                 done[seg_id] = manifest
 
@@ -1036,13 +1105,7 @@ class SegmentedIndex(InvertedIndex):
         )
 
     def pairs_postings(self, pairs: list[tuple[str, str]]) -> DataFrame:
-        from functools import reduce
-
-        cond = reduce(
-            lambda a, b: a | b,
-            [((F.col("field") == f) & (F.col("term") == t)) for f, t in pairs],
-        )
-        return self._unpack(self.blocks.where(cond))
+        return self._unpack(self.blocks.where(pairs_filter(pairs)))
 
     def terms_df_postings(self, fieldname: str, terms_df: DataFrame) -> DataFrame:
         """Distributed pairs_postings (see InvertedIndex.terms_df_postings):

@@ -75,18 +75,17 @@ def build_spell_words(docs: DataFrame, field_spec,
     for the trigram-blocked tier)."""
     import dataclasses
 
-    from whoosh_spark.indexing.build import _text_postings_generator
+    from whoosh_spark.fields import Schema
+    from whoosh_spark.indexing.build import build_index
 
+    # the field's default spec for every row (no per-language routing)
     fs = dataclasses.replace(
         field_spec,
         analyzer=dataclasses.replace(field_spec.analyzer, stem=False),
+        lang_col=None, lang_specs=None,
     )
-    gen = _text_postings_generator(fs, doc_id_col)
-    post = docs.select(doc_id_col, fs.name).mapInArrow(
-        gen,
-        "field string, term string, doc_id long, weight double, "
-        "positions array<int>, dl long",
-    )
+    post = build_index(docs.sparkSession, docs, Schema(fs), doc_id_col,
+                       materialize=False).postings
     return post.groupBy("term").agg(F.sum("weight").alias("total_weight"))
 
 

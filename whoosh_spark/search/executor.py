@@ -37,7 +37,12 @@ from pyspark.sql import functions as F
 
 from whoosh_spark.indexing.build import InvertedIndex
 from whoosh_spark.query import nodes as Q
-from whoosh_spark.search.facets import as_facet, facet_desc
+from whoosh_spark.search.facets import (
+    FieldFacet,
+    StoredFieldFacet,
+    as_facet,
+    facet_desc,
+)
 from whoosh_spark.search.scoring import BM25F, WeightingModel
 
 
@@ -67,6 +72,12 @@ _TA_MAX_K = 262_144
 # list; larger sets become a broadcast semi-join (a 100k-literal In blows
 # up plan serialization; the join is the cluster-scale shape).
 _TA_ISIN_MAX = 1_024
+
+
+def _slot_cols(key_cols: list[str]) -> list[str]:
+    """The positional ``_sk{i}`` sort-key slots among ``key_cols`` — keys
+    with no name of their own, used for ordering and then dropped."""
+    return [c for c in key_cols if c.startswith("_sk") and c[3:].isdigit()]
 
 
 class TimeLimitError(Exception):
@@ -519,7 +530,9 @@ class Searcher:
                 for c, d in zip(key_cols, descs)
             ]
             out = out.orderBy(*order, F.asc("doc_id"))
-            return out.limit(limit) if limit is not None else out
+            if limit is not None:
+                out = out.limit(limit)
+            return out.drop(*_slot_cols(key_cols))
         out = scored.orderBy(F.desc("score"), F.asc("doc_id"))
         return out.limit(limit) if limit is not None else out
 
@@ -545,12 +558,18 @@ class Searcher:
         key_cols: list[str] = []
         descs: list[bool] = []
         for i, f in enumerate(facets):
-            # plain single-column facets keep their field name in the
-            # output (Row.n, Row.role, ...); computed facets use their
-            # output_name or a positional slot; collisions fall back to
-            # the positional slot
-            name = f.output_name or (
-                f.columns[0] if len(f.columns) == 1 else f"_sk{i}")
+            # plain field facets keep their field name in the output
+            # (Row.n, Row.role, ...) — their key IS that column; computed
+            # facets use their output_name, else a positional slot that
+            # :func:`_slot_cols` drops from results, so an unnamed
+            # computed key never replaces a raw column. Collisions fall
+            # back to the positional slot.
+            if f.output_name:
+                name = f.output_name
+            elif type(f) in (FieldFacet, StoredFieldFacet):
+                name = f.name
+            else:
+                name = f"_sk{i}"
             if name in key_cols:
                 name = f"_sk{i}"
             key_cols.append(name)
@@ -1121,9 +1140,10 @@ class Searcher:
             lambda row: (tuple(row[c] for c in key_cols),
                          row["doc_id"], row["score"]),
             cmp_sorted)
+        slots = set(_slot_cols(key_cols))
         res = PartialResults(
             Row(**{"doc_id": d, "score": s,
-                   **dict(zip(key_cols, ks))})
+                   **{c: k for c, k in zip(key_cols, ks) if c not in slots}})
             for ks, d, s in items)
         res.partial = not done
         return res

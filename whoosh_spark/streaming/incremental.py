@@ -39,14 +39,13 @@ from pyspark.sql import functions as F
 
 from whoosh_spark import __version__ as _code_version
 from whoosh_spark.fields import Schema
-from whoosh_spark.indexing.build import build_index
 from whoosh_spark.indexing.segments import (
     BLOCK_SIZE,
-    BLOCKS_SCHEMA,
+    BUILD_DOC_CHUNK,
     STREAM_BASE,
     _finalize,
+    _invert_range,
     _manifest_dir,
-    _pack_partition,
     _read_manifest,
     merge_segments,
 )
@@ -139,14 +138,9 @@ class IncrementalIndexer:
         docs = batch_df.withColumn(
             "doc_id", (F.row_number().over(w) - 1 + F.lit(lo)).cast("long")
         )
-        ix = build_index(self.spark, docs, self.schema, materialize=False)
-        packed = (
-            ix.postings.repartition(2, "field", "term")
-            .sortWithinPartitions("field", "term", "doc_id")
-            .mapInArrow(_pack_partition, BLOCKS_SCHEMA)
-        )
+        # the batch is one segment, inverted in-task like build_segments'
         seg_path = os.path.join(self.path, "blocks", f"segment_id={seg_id}")
-        packed.sortWithinPartitions("field", "term", "block_id").write.mode(
+        _invert_range(docs, self.schema, lo, lo + n, BUILD_DOC_CHUNK).write.mode(
             "overwrite"
         ).parquet(seg_path)
         # stored fields for the streamed docs (docs table lives next to blocks)
