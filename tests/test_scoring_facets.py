@@ -337,3 +337,11 @@ def test_unnamed_computed_facets_keep_raw_columns_and_leak_no_slots(searcher):
     assert part.partial is False
     assert [r["doc_id"] for r in part] == [r["doc_id"] for r in out[:3]]
     assert all(not k.startswith("_sk") for r in part for k in r.asDict())
+
+    # only the slots assigned for unnamed keys are dropped: a key the
+    # caller named ``_sk1`` stays in the result like any output_name
+    named = TranslateFacet(lambda c: c % 3, FieldFacet("n"), name="_sk1")
+    df = searcher.search(q, sortedby=[ScoreFacet(), named], limit=None)
+    assert "_sk1" in df.columns and "_sk0" not in df.columns
+    assert {r["doc_id"]: r["_sk1"] for r in df.collect()} == {
+        d: n % 3 for d, n in raw.items()}

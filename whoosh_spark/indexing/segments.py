@@ -90,7 +90,12 @@ MERGED_BASE = 2_000_000_000
 # one chunk produce one block run per term. Cross-chunk block ranges of one
 # term may overlap after this split — the WAND refine bound and all readers
 # tolerate that (see search/wand.py).
-BUILD_DOC_CHUNK = 1 << 20
+# Sized from the build task's Python worker peak RSS on transcript turns
+# (~16 postings each, 4-CPU host): 0.8–1.0 GB with 80k docs in one task,
+# 1.2–1.3 GB with 320k, 1.1–1.25 GB with 1 << 18; 1 << 20 extrapolates to
+# 2–3 GB. Smaller chunks also mean more build tasks per segment, and one
+# more partial block per term at each chunk boundary.
+BUILD_DOC_CHUNK = 1 << 18
 
 BLOCKS_SCHEMA = T.StructType(
     [
@@ -266,7 +271,10 @@ def _inverter(schema: Schema):
         del parts
         order = pc.sort_indices(postings, sort_keys=[
             ("field", "ascending"), ("term", "ascending"), ("doc_id", "ascending")])
-        yield from _pack_partition(iter(postings.take(order).to_batches()))
+        # rebind: the unsorted copy is freed before packing starts
+        postings = postings.take(order)
+        del order
+        yield from _pack_partition(iter(postings.to_batches()))
 
     return invert
 
@@ -419,10 +427,13 @@ def build_segments(
     sub-writers (src/whoosh/multiproc.py::MpWriter): each task scans its
     doc range, analyzes, inverts and packs it in one Python pass
     (:func:`_invert_range`) and writes its block file; no postings
-    shuffle. Segments build CONCURRENTLY (one driver thread per pending
-    segment, at most ``defaultParallelism``): a serial per-segment loop
-    would put the wall-clock floor at n_segments x single-segment time no
-    matter how large the cluster is. Each thread still commits its own
+    shuffle. A build with fewer tasks than cores leaves the other cores
+    idle (n_segments=4 with segments under ``doc_chunk`` docs uses 4
+    cores); raise ``n_segments`` to match a larger cluster. Segments build
+    CONCURRENTLY (one driver thread per pending segment, at most
+    ``defaultParallelism``): a serial per-segment loop would put the
+    wall-clock floor at n_segments x single-segment time no matter how
+    large the cluster is. Each thread still commits its own
     manifest atomically, so resume semantics are unchanged under any
     interleaving of failures.
     """
@@ -444,16 +455,10 @@ def build_segments(
             "overwrite"
         ).parquet(seg_path)
 
-        # a build task writes one block run per term, starting at block_id
-        # 0: a one-task segment counts its terms without a distinct shuffle
-        if len(_chunk_ranges(lo, hi, doc_chunk)) == 1:
-            n_terms = F.sum((F.col("block_id") == 0).cast("long"))
-        else:
-            n_terms = F.count_distinct("field", "term")
         stats = spark.read.parquet(seg_path).agg(
             F.sum("n").alias("n_postings"),
             F.count("*").alias("n_blocks"),
-            n_terms.alias("n_terms"),
+            F.count_distinct("field", "term").alias("n_terms"),
         ).collect()[0]
         n_docs_seg = seg_docs.count()
         manifest = {

@@ -74,12 +74,6 @@ _TA_MAX_K = 262_144
 _TA_ISIN_MAX = 1_024
 
 
-def _slot_cols(key_cols: list[str]) -> list[str]:
-    """The positional ``_sk{i}`` sort-key slots among ``key_cols`` — keys
-    with no name of their own, used for ordering and then dropped."""
-    return [c for c in key_cols if c.startswith("_sk") and c[3:].isdigit()]
-
-
 class TimeLimitError(Exception):
     """Raised when search_with_time_limit exceeds its budget (reference:
     src/whoosh/collectors.py::TimeLimit)."""
@@ -523,7 +517,7 @@ class Searcher:
             scored = self._collapse(scored, collapse, collapse_limit,
                                     order=collapse_order)
         if sortedby is not None:
-            out, key_cols, descs = self._attach_sort_keys(
+            out, key_cols, descs, slots = self._attach_sort_keys(
                 scored, sortedby, reverse)
             order = [
                 (F.col(c).desc() if d else F.col(c).asc())
@@ -532,20 +526,22 @@ class Searcher:
             out = out.orderBy(*order, F.asc("doc_id"))
             if limit is not None:
                 out = out.limit(limit)
-            return out.drop(*_slot_cols(key_cols))
+            return out.drop(*slots)
         out = scored.orderBy(F.desc("score"), F.asc("doc_id"))
         return out.limit(limit) if limit is not None else out
 
     def _attach_sort_keys(self, scored: DataFrame, sortedby, reverse: bool):
         """Join the doc columns a ``sortedby`` spec needs and attach all
         key columns in ONE simultaneous projection -> (df, key_cols,
-        descs). One select, not sequential withColumns: a facet whose
-        output name shadows a source column (e.g. a FunctionFacet named
-        after the field it transforms) must not overwrite the input
-        another facet's expression still reads. Duplicate output names
-        get positional ``_sk{i}`` slots so every key keeps its own
-        expression. Shared by :meth:`search` and the sorted-partials
-        engine so both order identically."""
+        descs, slots). One select, not sequential withColumns: a facet
+        whose output name shadows a source column (e.g. a FunctionFacet
+        named after the field it transforms) must not overwrite the input
+        another facet's expression still reads. Unnamed computed keys and
+        duplicate output names get positional ``_sk{i}`` slots so every
+        key keeps its own expression; ``slots`` lists the slot names
+        assigned, which callers drop from results after ordering. Shared
+        by :meth:`search` and the sorted-partials engine so both order
+        identically."""
         keys = ([sortedby] if not isinstance(sortedby, (list, tuple))
                 else list(sortedby))
         facets = [as_facet(k) for k in keys]
@@ -557,27 +553,28 @@ class Searcher:
             out = out.join(docs, "doc_id")
         key_cols: list[str] = []
         descs: list[bool] = []
+        slots: list[str] = []
         for i, f in enumerate(facets):
             # plain field facets keep their field name in the output
             # (Row.n, Row.role, ...) — their key IS that column; computed
-            # facets use their output_name, else a positional slot that
-            # :func:`_slot_cols` drops from results, so an unnamed
-            # computed key never replaces a raw column. Collisions fall
-            # back to the positional slot.
+            # facets use their output_name, else a positional slot that is
+            # dropped from results, so an unnamed computed key never
+            # replaces a raw column. Collisions fall back to the slot.
             if f.output_name:
                 name = f.output_name
             elif type(f) in (FieldFacet, StoredFieldFacet):
                 name = f.name
             else:
+                name = None
+            if name is None or name in key_cols:
                 name = f"_sk{i}"
-            if name in key_cols:
-                name = f"_sk{i}"
+                slots.append(name)
             key_cols.append(name)
             descs.append(facet_desc(f, reverse))
         base = [c for c in out.columns if c not in set(key_cols)]
         out = out.select(
             *base, *[f.key().alias(n) for f, n in zip(facets, key_cols)])
-        return out, key_cols, descs
+        return out, key_cols, descs, slots
 
     def _wand_desc(self, q: Q.Query):
         """Eligibility analysis for block-max WAND routing: returns a plan
@@ -1104,7 +1101,7 @@ class Searcher:
         # UNSORTED frame: a global orderBy would force the full sort
         # before the first row arrives and an expired budget would hand
         # back nothing
-        out_df, key_cols, descs = self._attach_sort_keys(
+        out_df, key_cols, descs, slots = self._attach_sort_keys(
             scored, sortedby, reverse)
         stream = out_df.select("doc_id", "score", *key_cols)
 
@@ -1140,7 +1137,6 @@ class Searcher:
             lambda row: (tuple(row[c] for c in key_cols),
                          row["doc_id"], row["score"]),
             cmp_sorted)
-        slots = set(_slot_cols(key_cols))
         res = PartialResults(
             Row(**{"doc_id": d, "score": s,
                    **{c: k for c, k in zip(key_cols, ks) if c not in slots}})
