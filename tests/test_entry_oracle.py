@@ -72,3 +72,42 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) >= 0
     assert df.columns == ["doc_id", "score"]
+
+
+def test_emb_lang_centroids_is_layout_invariant(spark, monkeypatch):
+    """The r5 red driver row. Two layouts (shuffle partitions 3 vs 31,
+    inputs repartitioned 5 vs 17 ways) must give identical values, equal
+    to the DuckDB oracle at sf0.01. Values compare by ``repr``, as a value
+    hash does, so 0.0 and -0.0 differ: DuckDB's ``round`` gives -0.0 for
+    means in (-0.00005, 0) where Spark's gives 0.0."""
+    import whoosh_spark.entry_pipeline as ep
+
+    sf = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    name = "emb_lang_centroids"
+    raw_emb, raw_docs = ep._emb, ep._docs
+    conf = {k: spark.conf.get(k) for k in (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.adaptive.coalescePartitions.enabled")}
+    runs = []
+    try:
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+        for shuffle, n_in in ((3, 5), (31, 17)):
+            spark.conf.set("spark.sql.shuffle.partitions", str(shuffle))
+            monkeypatch.setattr(ep, "_emb", lambda s, d, n=n_in: raw_emb(s, d).repartition(n))
+            monkeypatch.setattr(ep, "_docs", lambda s, d, n=n_in: raw_docs(s, d).repartition(n))
+            sdf = entry_mod.queries()[name](spark, sf)
+            runs.append(sorted(repr(tuple(r[c] for c in sorted(sdf.columns)))
+                               for r in sdf.collect()))
+    finally:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+    assert runs[0] == runs[1]
+
+    con = duckdb.connect()
+    for t in ("documents", "embeddings"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
+    res = con.execute(entry_mod.oracle_sql()[name])
+    cols = [d[0] for d in res.description]
+    oracle = sorted(repr(tuple(d[c] for c in sorted(cols)))
+                    for d in (dict(zip(cols, r)) for r in res.fetchall()))
+    assert runs[0] == oracle

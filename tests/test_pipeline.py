@@ -1223,6 +1223,33 @@ def test_group_centroids_matches_numpy(spark, emb, docs):
     assert again == base
 
 
+def test_group_centroids_mean_is_order_independent(spark):
+    """Double addition is not associative: 1e16 + 1.0 rounds the 1.0 away,
+    so a double ``avg`` over (1e16, 1, -1e16, 1) reads 0.25 or 0.5 by the
+    order partial sums meet in. The decimal sum is exact at every layout."""
+    from pyspark.sql import types as T
+
+    from whoosh_spark.pipeline import group_centroids
+
+    vals = [1e16, 1.0, -1e16, 1.0]
+    emb = spark.createDataFrame(
+        [(i, [v]) for i, v in enumerate(vals)],
+        T.StructType([T.StructField("vec_id", T.LongType()),
+                      T.StructField("embedding", T.ArrayType(T.DoubleType()))]))
+    labels = spark.createDataFrame([(i, "g") for i in range(len(vals))],
+                                   ["vec_id", "g"])
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for parts in (1, 3, 4):
+            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+            for layout in (emb.coalesce(1), emb.repartition(4, "vec_id"),
+                           emb.repartition(2).sortWithinPartitions(F.desc("vec_id"))):
+                [row] = group_centroids(layout, labels, "g").collect()
+                assert (row.n, list(row.centroid)) == (4, [0.5])
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
 # ------------------------------------------------ c4_line_filter
 
 

@@ -22,3 +22,7 @@ driver's DuckDB oracle.
 __version__ = "0.1.0"
 
 from whoosh_spark.fields import FieldSpec, Schema  # noqa: F401
+
+from whoosh_spark import _worker
+
+_worker.install()

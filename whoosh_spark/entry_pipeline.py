@@ -5433,7 +5433,10 @@ WHERE n.n > 0
         "emb_lang_centroids",
         # language-domain centroids of the embedding table, exploded to
         # (lang, pos, value) so the driver canonicalizer sees a flat
-        # schema; values rounded AFTER the mean (one float op mirrored)
+        # schema; the mean is an exact DECIMAL(38,18) sum over the count
+        # (layout-independent), rounded AFTER the mean, mirrored in SQL.
+        # Spark's round goes through BigDecimal and never yields -0.0;
+        # DuckDB's does for means in (-0.00005, 0), so the oracle adds 0.0
         lambda spark, sf: group_centroids(
             _emb(spark, sf),
             _docs(spark, sf).select(F.col("doc_id").alias("vec_id"), "lang"),
@@ -5447,7 +5450,8 @@ WITH expl AS (
          generate_subscripts(e.embedding, 1) - 1 AS pos,
          unnest(e.embedding) AS v
   FROM embeddings e JOIN documents d ON e.vec_id = d.doc_id)
-SELECT lang, count(*)::BIGINT AS n, pos, round(avg(v), 4) AS value
+SELECT lang, count(*)::BIGINT AS n, pos,
+       round(sum(v::DOUBLE::DECIMAL(38,18)) / count(v), 4) + 0.0 AS value
 FROM expl GROUP BY lang, pos
 """,
     )

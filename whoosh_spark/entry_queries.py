@@ -1207,10 +1207,11 @@ _REGISTRY_CACHE: dict | None = None
 # The driver checks the FIRST ~50 registry entries per round. Since
 # round 5 the priority order is GENERATED from the CORRECTNESS_r*.json
 # history (VERDICT r4 "Next round" #1: "consider generating the order
-# from CORRECTNESS history so this never recurs"): entries that have
-# never had a driver row sort first, then everything else by the round
-# it was last checked (oldest first), registration order as the
-# tie-break. `_WINDOW_DEPRIORITIZE` pins the named degenerate twins to
+# from CORRECTNESS history so this never recurs"): entries whose latest
+# driver row failed sort first (VERDICT r5 #4), then entries that have
+# never had a driver row, then everything else by the round it was last
+# checked (oldest first), registration order as the tie-break.
+# `_WINDOW_DEPRIORITIZE` pins the named degenerate twins to
 # the back of the never-checked tier so the window spends its slots on
 # distinct operators first (the twins' machinery is already driven by
 # their full-fidelity siblings in the same window).
@@ -1234,13 +1235,14 @@ _WINDOW_DEPRIORITIZE = [
 ]
 
 
-def _correctness_history() -> dict[str, int]:
-    """name -> latest round with a driver CORRECTNESS row, from repo root."""
+def _correctness_history() -> dict[str, tuple[int, dict]]:
+    """name -> (latest round with a driver CORRECTNESS row, that row),
+    from the CORRECTNESS_r*.json files at the repo root."""
     import json
     from pathlib import Path
 
     root = Path(__file__).resolve().parent.parent
-    last: dict[str, int] = {}
+    last: dict[str, tuple[int, dict]] = {}
     for p in sorted(root.glob("CORRECTNESS_r*.json")):
         digits = "".join(ch for ch in p.stem.split("_r")[-1] if ch.isdigit())
         if not digits:
@@ -1251,32 +1253,50 @@ def _correctness_history() -> dict[str, int]:
             continue
         if isinstance(data, dict):
             rnd = int(digits)
-            for k in data:
-                last[k] = max(rnd, last.get(k, 0))
+            for k, row in data.items():
+                if rnd >= last.get(k, (0, {}))[0]:
+                    last[k] = (rnd, row if isinstance(row, dict) else {})
     return last
 
 
-def _driver_window_order(names: list[str]) -> list[str]:
+def _row_failed(row: dict) -> bool:
+    """A driver row that did not verify: any match flag false, or an
+    error. ``no_oracle`` is a rows-only entry's standing marker, not a
+    failure; sorting those first would pin them to the window head."""
+    err = row.get("err")
+    return (any(row.get(k) is False for k in ("hash_match", "rows_match", "schema_match"))
+            or (err is not None and err != "no_oracle"))
+
+
+def _window_tier(name: str, history: dict[str, tuple[int, dict]],
+                 demoted: set[str]) -> float:
+    """-1 = latest driver row failed, 0 = never driver-checked, 0.5 =
+    never-checked but statically deprioritized twin, r = last checked
+    (and passed) in round r."""
+    if name not in history:
+        return 0.5 if name in demoted else 0.0
+    rnd, row = history[name]
+    return -1.0 if _row_failed(row) else float(rnd)
+
+
+def _driver_window_order(names: list[str],
+                         history: dict[str, tuple[int, dict]]) -> list[str]:
     """Order registry entries for the driver's ~50-slot per-round window.
 
-    Tiers: 0 = never driver-checked, 0.5 = never-checked but statically
-    deprioritized twins, r = last checked in round r (ascending). Within
-    a tier, registration order (deterministic) is kept. Falls back to
-    the hand-maintained round-4 `_WINDOW_FIRST` order when no
-    CORRECTNESS history exists beside the package.
+    Ascending `_window_tier` over ``history`` (`_correctness_history`
+    shape): failed last time first, then never checked, then oldest
+    checked. Within a tier, registration order (deterministic) is kept.
+    Falls back to the hand-maintained round-4 `_WINDOW_FIRST` order when
+    the history is empty.
     """
-    last = _correctness_history()
-    if not last:
+    if not history:
         names_set = set(names)
         head = [n for n in _WINDOW_FIRST if n in names_set]
         head_set = set(head)
         return head + [n for n in names if n not in head_set]
     demoted = set(_WINDOW_DEPRIORITIZE)
     pos = {n: i for i, n in enumerate(names)}
-    return sorted(
-        names,
-        key=lambda n: (last.get(n, 0.5 if n in demoted else 0.0), pos[n]),
-    )
+    return sorted(names, key=lambda n: (_window_tier(n, history, demoted), pos[n]))
 
 
 # Historical round-4 hand-maintained window order (fallback + audit
@@ -1444,5 +1464,6 @@ def registry() -> dict:
         from whoosh_spark.entry_pipeline import pipeline_registry
 
         full = {**_registry(), **pipeline_registry()}
-        _REGISTRY_CACHE = {n: full[n] for n in _driver_window_order(list(full))}
+        order = _driver_window_order(list(full), _correctness_history())
+        _REGISTRY_CACHE = {n: full[n] for n in order}
     return _REGISTRY_CACHE

@@ -564,13 +564,21 @@ def group_centroids(emb: DataFrame, labels: DataFrame, by: str,
     vectors, whose per-group state would be members x dim at web scale),
     then reassemble each centroid with a bounded sort over its own dim
     entries. Two key shuffles total, state bounded by groups x dim.
+
+    The mean is ``sum(cast(v as decimal(38,18))) / count(v)``: for
+    |v| < 1e20 the decimal sum is exact, so the centroid does not depend
+    on the order partial sums meet in, as a double ``avg``'s last bits do.
     """
     joined = emb.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")) \
         .join(labels.select(F.col(id_col).alias("_id"), F.col(by)), "_id")
     dims = (
         joined.select(by, F.posexplode(F.col("_v").cast("array<double>")))
         .groupBy(by, "pos")
-        .agg(F.avg("col").alias("_m"), F.count(F.lit(1)).alias("_n"))
+        .agg(
+            (F.sum(F.col("col").cast("decimal(38,18)")) / F.count("col"))
+            .cast("double").alias("_m"),
+            F.count(F.lit(1)).alias("_n"),
+        )
     )
     return (
         dims.groupBy(by)
