@@ -2,6 +2,7 @@
 and its oracle_sql() via DuckDB on the same parquet tables, compare row
 count, column names, and order-insensitive values (floats to 4dp)."""
 
+import math
 import os
 
 import duckdb
@@ -27,16 +28,16 @@ def duck():
 
 
 def _canon(dicts: list[dict], order: list[str]) -> list[tuple]:
-    out = []
-    for d in dicts:
-        vals = []
-        for c in order:
-            v = d[c]
-            if isinstance(v, float):
-                v = round(v, 4) + 0.0
-            vals.append(v)
-        out.append(tuple(vals))
-    return sorted(out, key=repr)
+    """Rows as tuples in ``order`` with floats rounded to 4dp, sorted by
+    their repr with -0.0 read as 0.0. The rounded values keep their sign,
+    which a value hash that formats floats tells apart."""
+    out = [tuple(round(v, 4) if isinstance(v, float) else v
+                 for v in (d[c] for c in order)) for d in dicts]
+
+    def key(row):
+        return repr(tuple(v + 0.0 if isinstance(v, float) else v for v in row)), repr(row)
+
+    return sorted(out, key=key)
 
 
 NAMES = sorted(entry_mod.queries())
@@ -63,6 +64,8 @@ def test_query_matches_oracle(spark, duck, name):
         for x, y in zip(ra, rb):
             if isinstance(x, float) or isinstance(y, float):
                 assert float(x) == pytest.approx(float(y), abs=2e-4), f"{name} row {i}: {ra} vs {rb}"
+                assert math.copysign(1.0, x) == math.copysign(1.0, y), \
+                    f"{name} row {i}: signed zero {ra} vs {rb}"
             else:
                 assert x == y, f"{name} row {i}: {ra} vs {rb}"
 

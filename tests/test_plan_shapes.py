@@ -82,15 +82,17 @@ def test_segment_build_is_one_python_pass_without_exchange(
     """A segment's write job (the frame build_segments writes) scans its
     doc range and inverts it in ONE mapInArrow: no Exchange (no postings
     shuffle, no sort) and no other Python node between the scan and the
-    block rows."""
+    block rows. The piece's doc count is observed in the same pass."""
     from whoosh_spark.indexing.segments import BUILD_DOC_CHUNK, _invert_range
 
     src = str(tmp_path_factory.mktemp("plandocs") / "docs.parquet")
     corpus.write.parquet(src)
     docs = spark.read.parquet(src)
     n = corpus.count()
-    p = _plan(_invert_range(docs, transcript_schema(), 0, n // 2,
-                            BUILD_DOC_CHUNK))
+    blocks, doc_obs = _invert_range(docs, transcript_schema(), 0, n // 2,
+                                    BUILD_DOC_CHUNK)
+    p = _plan(blocks)
+    assert p.count("CollectMetrics") == len(doc_obs) == 1
     assert "Exchange" not in p
     assert "Sort" not in p
     assert p.count("MapInArrow") == 1
@@ -102,8 +104,49 @@ def test_segment_build_is_one_python_pass_without_exchange(
     below = [re.match(r"\s*(?:\+-\s*)?(?:\*\(\d+\)\s*)?(\w+)", ln).group(1)
              for ln in lines[top + 1:]]
     assert below[-1] == "FileScan"
-    assert set(below[:-1]) <= {"Coalesce", "Project", "Filter", "ColumnarToRow"}
+    assert set(below[:-1]) <= {"Coalesce", "CollectMetrics", "Project",
+                               "Filter", "ColumnarToRow"}
     assert "GreaterThanOrEqual(doc_id,0)" in p
+
+
+# _finalize's jobs on a first build: the stats groupBy, the range
+# partitioner's sample, the range shuffle and the stats write
+FINALIZE_JOBS = 4
+
+
+def test_segment_build_and_open_read_nothing_back(
+        spark, corpus, tmp_path, monkeypatch):
+    """build_segments submits one job per segment — its write, which also
+    counts the manifest — and then only _finalize's jobs: no job scans a
+    segment's blocks between its write and _finalize. open_segments on an
+    index with no deletes submits none (every read passes its schema)."""
+    import whoosh_spark.indexing.segments as S
+
+    sc, tracker = spark.sparkContext, spark.sparkContext.statusTracker()
+    at_finalize = []
+    real_finalize = S._finalize
+
+    def spy(*args, **kwargs):
+        at_finalize.append(len(tracker.getJobIdsForGroup("pin-build")))
+        return real_finalize(*args, **kwargs)
+
+    monkeypatch.setattr(S, "_finalize", spy)
+    path, n = str(tmp_path / "ix"), corpus.count()
+    try:
+        sc.setJobGroup("pin-build", "build_segments")
+        man = build_segments(spark, corpus, transcript_schema(), path,
+                             n_segments=3, doc_count=n)
+        build_jobs = len(tracker.getJobIdsForGroup("pin-build"))
+        sc.setJobGroup("pin-open", "open_segments")
+        open_segments(spark, path, corpus, transcript_schema())
+        open_jobs = len(tracker.getJobIdsForGroup("pin-open"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(man) == 3
+    assert at_finalize == [3]
+    assert build_jobs <= 3 + FINALIZE_JOBS
+    assert open_jobs == 0
 
 
 def test_executor_topk_is_take_ordered_not_global_sort(six):

@@ -691,7 +691,51 @@ def test_append_batch_round_trips_postings(spark, tmp_path):
     sb = lix.terms.select("field", "term", "df", "total_weight").orderBy(
         "field", "term").toPandas()
     assert sa.values.tolist() == sb.values.tolist()
+    # the streamed manifest carries the counts its write observed
+    assert _block_counts(six) == _manifest_counts(six.manifest)
+    assert [m["n_docs"] for m in six.manifest.values()] == [120]
     stored.unpersist()
+
+
+def _block_counts(six) -> dict:
+    """segment id -> (n_terms, n_postings, n_blocks) aggregated over the
+    segment's written block rows."""
+    rows = six.blocks.groupBy("segment_id").agg(
+        F.count_distinct("field", "term").alias("t"), F.sum("n").alias("p"),
+        F.count("*").alias("b")).collect()
+    return {r["segment_id"]: (r["t"], r["p"], r["b"]) for r in rows}
+
+
+def _manifest_counts(man: dict) -> dict:
+    return {s: (m["n_terms"], m["n_postings"], m["n_blocks"])
+            for s, m in man.items()}
+
+
+@pytest.mark.parametrize("doc_chunk", [None, 50])
+def test_manifest_counts_equal_written_blocks(spark, corpus, tmp_path, doc_chunk):
+    """Manifest counts observed on the segment write, over sparse doc ids
+    (every 7th id dropped): n_docs is the real row count of the segment's
+    range, and n_terms / n_postings / n_blocks equal the aggregates of the
+    written blocks — with one doc chunk per segment (terms counted from
+    block_id 0) and with many (terms counted over the written blocks)."""
+    docs = corpus.where(F.col("doc_id") % 7 != 0)
+    n = corpus.count()
+    path = str(tmp_path / "ix")
+    kw = {} if doc_chunk is None else {"doc_chunk": doc_chunk}
+    man = build_segments(spark, docs, transcript_schema(), path, n_segments=3,
+                         doc_count=n, **kw)
+    six = open_segments(spark, path, docs, transcript_schema())
+    assert len(man) == 3
+    for m in man.values():
+        assert m["n_docs"] == docs.where(
+            (F.col("doc_id") >= m["doc_lo"]) & (F.col("doc_id") < m["doc_hi"])
+        ).count() > 0
+    assert _block_counts(six) == _manifest_counts(man)
+    if doc_chunk is not None:
+        # terms restart at each chunk: block_id 0 rows overcount the terms
+        zeros = dict(six.blocks.where("block_id = 0").groupBy("segment_id")
+                     .count().collect())
+        assert all(zeros[s] > m["n_terms"] for s, m in man.items())
 
 
 def test_many_term_lookups_do_not_overflow(six, lix):

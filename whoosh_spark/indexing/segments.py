@@ -28,11 +28,17 @@ generation manifest):
   On a production cluster this table is the Iceberg `postings` table — the
   layout and the manifest below are Iceberg-snapshot-shaped on purpose.
 - **Checkpoint/resume + lineage** (north rule): each segment commits
-  atomically — blocks parquet, per-segment term stats, then a JSON manifest
-  row `_manifest/seg_<id>.json` with doc range, counts, wall time and
-  lineage. A re-run of build_segments() skips committed segments (the
-  reference's TOC generation swap, src/whoosh/writing.py::SegmentWriter
-  .commit ~L800, made per-partition).
+  atomically — blocks parquet, then a JSON manifest row
+  `_manifest/seg_<id>.json` with doc range, counts, wall time and lineage;
+  the global term stats and the TOC follow in :func:`_finalize`. The
+  counts are observed during the block write (like the reference's
+  SegmentWriter, which tallies docs, postings and terms as it writes,
+  src/whoosh/writing.py::SegmentWriter.commit ~L800): no job reads a
+  segment back to count it. A re-run of build_segments() skips committed
+  segments (the reference's TOC generation swap, made per-partition).
+- Every read of engine-written Parquet (blocks, term stats, id sets)
+  passes its known schema, so opening an index runs no schema-inference
+  job.
 
 At 100 TB: doc chunks bound the memory of any build task and the skew of
 any single (field, term) group — a term's postings in one task can't
@@ -51,7 +57,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -115,6 +121,16 @@ BLOCKS_SCHEMA = T.StructType(
         T.StructField("pos_vals", T.BinaryType(), True),
     ]
 )
+# block rows read back with their partition column (see _segment_blocks)
+SEGMENT_BLOCKS_SCHEMA = T.StructType(
+    BLOCKS_SCHEMA.fields + [T.StructField("segment_id", T.IntegerType())])
+# one row per (field, term) of a term-stats layer (see _stats_agg)
+STATS_SCHEMA = T.StructType(
+    [T.StructField(n, t) for n, t in (
+        ("field", T.StringType()), ("term", T.StringType()),
+        ("df", T.LongType()), ("total_weight", T.DoubleType()),
+        ("max_weight", T.DoubleType()), ("min_doc", T.LongType()),
+        ("max_doc", T.LongType()))])
 
 
 # ---------------------------------------------------------------- packing
@@ -280,22 +296,59 @@ def _inverter(schema: Schema):
 
 
 def _invert_range(docs: DataFrame, schema: Schema, lo: int, hi: int,
-                  doc_chunk: int, doc_id_col: str = "doc_id") -> DataFrame:
+                  doc_chunk: int, doc_id_col: str = "doc_id"
+                  ) -> tuple[DataFrame, list[Observation]]:
     """Block rows of the docs with ``lo <= doc_id < hi``: one task per
     BUILD_DOC_CHUNK-aligned piece of the range, each scanning its piece
     (the range filter pushes into the docs scan) and inverting it in ONE
     Python pass (:func:`_inverter`). No exchange anywhere — a segment is a
-    doc-range shard, so there is nothing to shuffle by term."""
+    doc-range shard, so there is nothing to shuffle by term. Also returns
+    one Observation per piece counting its docs (``n_docs``), filled by
+    whichever action runs the frame."""
     from functools import reduce
 
     src = _postings_source(docs, schema, doc_id_col)
     invert = _inverter(schema)
-    return reduce(DataFrame.union, [
-        src.where((F.col("doc_id") >= a) & (F.col("doc_id") < b))
-        .coalesce(1)
-        .mapInArrow(invert, BLOCKS_SCHEMA)
-        for a, b in _chunk_ranges(lo, hi, doc_chunk)
-    ])
+    pieces, doc_obs = [], []
+    for a, b in _chunk_ranges(lo, hi, doc_chunk):
+        doc_obs.append(Observation())
+        pieces.append(
+            src.where((F.col("doc_id") >= a) & (F.col("doc_id") < b))
+            .observe(doc_obs[-1], F.count(F.lit(1)).alias("n_docs"))
+            .coalesce(1)
+            .mapInArrow(invert, BLOCKS_SCHEMA))
+    return reduce(DataFrame.union, pieces), doc_obs
+
+
+def _write_segment(docs: DataFrame, schema: Schema, lo: int, hi: int,
+                   doc_chunk: int, seg_path: str,
+                   doc_id_col: str = "doc_id") -> dict:
+    """Invert the docs in ``[lo, hi)`` into the block file at ``seg_path``
+    and return the segment's manifest counts (n_docs, n_postings, n_blocks,
+    n_terms), observed on the write job itself — the reference's
+    SegmentWriter likewise tallies while it writes. Block ids restart at 0
+    once per (field, term) in each build task, so ``block_id = 0`` rows
+    count the terms exactly when the segment is one task; a segment of
+    several doc chunks restarts a term at each chunk and counts its
+    distinct terms over the written blocks instead (Spark rejects DISTINCT
+    in observed metrics)."""
+    blocks, doc_obs = _invert_range(docs, schema, lo, hi, doc_chunk, doc_id_col)
+    obs = Observation()
+    # each task's blocks come out sorted by (field, term, block_id), so
+    # Parquet min/max stats prune term lookups to few row groups
+    # (ordered term dict analogue) with no extra sort
+    blocks.observe(
+        obs,
+        F.coalesce(F.sum("n"), F.lit(0)).alias("n_postings"),
+        F.count(F.lit(1)).alias("n_blocks"),
+        F.count_if(F.col("block_id") == 0).alias("n_terms"),
+    ).write.mode("overwrite").parquet(seg_path)
+    counts = {"n_docs": sum(o.get["n_docs"] for o in doc_obs), **obs.get}
+    if len(doc_obs) > 1:
+        counts["n_terms"] = (
+            docs.sparkSession.read.schema(BLOCKS_SCHEMA).parquet(seg_path)
+            .select(F.count_distinct("field", "term")).first()[0])
+    return counts
 
 
 def _chunk_ranges(lo: int, hi: int, doc_chunk: int) -> list[tuple[int, int]]:
@@ -443,32 +496,22 @@ def build_segments(
         doc_count = docs.count()
     per_seg = math.ceil(doc_count / n_segments) if doc_count else 1
 
+    # each build thread runs its jobs under the caller's job group and
+    # description (its own copy: Spark SQL sets per-thread properties)
+    caller_props = spark.sparkContext._jsc.sc().getLocalProperties().clone()
+
     def _build_one(seg_id: int) -> tuple[int, dict]:
+        spark.sparkContext._jsc.sc().setLocalProperties(caller_props.clone())
         lo, hi = seg_id * per_seg, min((seg_id + 1) * per_seg, doc_count)
         t0 = time.perf_counter()
-        seg_docs = docs.where((F.col(doc_id_col) >= lo) & (F.col(doc_id_col) < hi))
         seg_path = os.path.join(path, "blocks", f"segment_id={seg_id}")
-        # each task's blocks come out sorted by (field, term, block_id), so
-        # Parquet min/max stats prune term lookups to few row groups
-        # (ordered term dict analogue) with no extra sort
-        _invert_range(docs, schema, lo, hi, doc_chunk, doc_id_col).write.mode(
-            "overwrite"
-        ).parquet(seg_path)
-
-        stats = spark.read.parquet(seg_path).agg(
-            F.sum("n").alias("n_postings"),
-            F.count("*").alias("n_blocks"),
-            F.count_distinct("field", "term").alias("n_terms"),
-        ).collect()[0]
-        n_docs_seg = seg_docs.count()
+        counts = _write_segment(docs, schema, lo, hi, doc_chunk, seg_path,
+                                doc_id_col)
         manifest = {
             "segment_id": seg_id,
             "doc_lo": lo,
             "doc_hi": hi,
-            "n_docs": n_docs_seg,
-            "n_postings": int(stats["n_postings"] or 0),
-            "n_blocks": int(stats["n_blocks"] or 0),
-            "n_terms": int(stats["n_terms"] or 0),
+            **counts,
             "wall_s": round(time.perf_counter() - t0, 3),
             "lineage": {
                 "source": "docs-dataframe",
@@ -502,7 +545,8 @@ def _segment_blocks(spark: SparkSession, path: str, segment_ids: list[int]) -> D
     """Block rows of the given segments, with the segment_id partition col."""
     base = os.path.join(path, "blocks")
     dirs = [os.path.join(base, f"segment_id={s}") for s in segment_ids]
-    return spark.read.option("basePath", base).parquet(*dirs)
+    return (spark.read.schema(SEGMENT_BLOCKS_SCHEMA)
+            .option("basePath", base).parquet(*dirs))
 
 
 def _stats_dir(path: str, generation: int) -> str:
@@ -573,7 +617,7 @@ def read_term_stats(spark: SparkSession, path: str,
         names = stats.get("layers") or [
             os.path.basename(_stats_dir(path, int(stats["generation"])))]
         dirs = [os.path.join(path, n) for n in names]
-    df = spark.read.parquet(*dirs)
+    df = spark.read.schema(STATS_SCHEMA).parquet(*dirs)
     return _stats_agg(df) if len(dirs) > 1 else df
 
 
@@ -646,7 +690,7 @@ def _finalize(spark: SparkSession, path: str, doc_count: int,
             # tier's blocks)
             prev_dirs = [os.path.join(path, n) for n in prev[2]]
             stats = _stats_agg(
-                spark.read.parquet(*prev_dirs).unionByName(
+                spark.read.schema(STATS_SCHEMA).parquet(*prev_dirs).unionByName(
                     _block_stats(delta_ids))
             )
             _write_stats(stats, new_dir, lexicon_buckets)
@@ -902,7 +946,7 @@ def merge_segments(
         "overwrite"
     ).parquet(seg_path)
 
-    new_blocks = spark.read.parquet(seg_path)
+    new_blocks = spark.read.schema(BLOCKS_SCHEMA).parquet(seg_path)
     stats = new_blocks.agg(
         F.sum("n").alias("n_postings"),
         F.count("*").alias("n_blocks"),
@@ -1159,11 +1203,11 @@ def _read_id_set(spark: SparkSession, p: str) -> DataFrame | None:
         return os.path.isdir(d) and any(f.endswith(".parquet") for f in os.listdir(d))
 
     if ok(p):
-        return spark.read.parquet(p)
+        return spark.read.schema("doc_id long").parquet(p)
     if ok(p + ".old"):
         # crash landed mid-swap in _write_id_set: the pre-write set is the
         # committed one
-        return spark.read.parquet(p + ".old")
+        return spark.read.schema("doc_id long").parquet(p + ".old")
     return None
 
 

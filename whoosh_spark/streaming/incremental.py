@@ -44,9 +44,9 @@ from whoosh_spark.indexing.segments import (
     BUILD_DOC_CHUNK,
     STREAM_BASE,
     _finalize,
-    _invert_range,
     _manifest_dir,
     _read_manifest,
+    _write_segment,
     merge_segments,
 )
 
@@ -138,11 +138,11 @@ class IncrementalIndexer:
         docs = batch_df.withColumn(
             "doc_id", (F.row_number().over(w) - 1 + F.lit(lo)).cast("long")
         )
-        # the batch is one segment, inverted in-task like build_segments'
+        # the batch is one segment, inverted, written and counted in-task
+        # like build_segments'
         seg_path = os.path.join(self.path, "blocks", f"segment_id={seg_id}")
-        _invert_range(docs, self.schema, lo, lo + n, BUILD_DOC_CHUNK).write.mode(
-            "overwrite"
-        ).parquet(seg_path)
+        counts = _write_segment(docs, self.schema, lo, lo + n, BUILD_DOC_CHUNK,
+                                seg_path)
         # stored fields for the streamed docs (docs table lives next to blocks)
         docs.write.mode("overwrite").parquet(
             os.path.join(self.path, "docs", f"segment_id={seg_id}")
@@ -151,10 +151,7 @@ class IncrementalIndexer:
             "segment_id": seg_id,
             "doc_lo": lo,
             "doc_hi": lo + n,
-            "n_docs": n,
-            "n_postings": None,
-            "n_blocks": None,
-            "n_terms": None,
+            **counts,
             "wall_s": round(time.perf_counter() - t0, 3),
             "lineage": {
                 "source": "stream-batch",
