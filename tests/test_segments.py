@@ -216,9 +216,11 @@ def test_wand_batch_equals_per_query(spark, six):
         assert by_q.get(qid, []) == solo, qid
 
 
-def test_wand_batch_and_mode_and_deletes(spark, corpus, tmp_path_factory):
+@pytest.mark.parametrize("shard_docs", ["auto", 100])
+def test_wand_batch_and_mode_and_deletes(spark, corpus, tmp_path_factory, shard_docs):
     """Batched AND-mode parity on an index WITH deletions: the delete
-    markers must replicate into every query's kernel groups."""
+    markers must replicate into every query's kernel groups, and with
+    doc-range shards into every (query, shard) group."""
     from whoosh_spark.indexing.segments import delete_docs
     from whoosh_spark.search.wand import wand_topk_many
 
@@ -231,7 +233,8 @@ def test_wand_batch_and_mode_and_deletes(spark, corpus, tmp_path_factory):
     six = open_segments(spark, path, corpus, transcript_schema())
 
     queries = {0: ["hash", "join"], 1: ["spark", "data"]}
-    batch = wand_topk_many(six, "text", queries, k=8, mode="and").collect()
+    batch = wand_topk_many(six, "text", queries, k=8, mode="and",
+                           shard_docs=shard_docs).collect()
     by_q = {}
     for r in batch:
         by_q.setdefault(r.query_id, []).append((r.doc_id, r.score))

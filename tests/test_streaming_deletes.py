@@ -250,6 +250,37 @@ def test_mass_delete_dataframe_merge_expunge(spark, corpus, tmp_path_factory):
     assert {r.doc_id for r in hits2} == {r.doc_id for r in hits}
 
 
+def test_merge_expunge_writes_manifest_once_atomically(spark, corpus, tmp_path_factory,
+                                                       monkeypatch):
+    """An expunging merge commits its manifest once, through a tmp file and
+    a rename: a direct write to a committed ``seg_*.json`` could be cut
+    short by a crash and leave JSON that no later open can parse."""
+    import builtins
+
+    from whoosh_spark.indexing import segments
+    from whoosh_spark.indexing.segments import _read_manifest
+
+    path = str(tmp_path_factory.mktemp("mergeonce") / "ix")
+    build_segments(spark, corpus, transcript_schema(), path, n_segments=3)
+    victims = corpus.where(F.col("doc_id") % 5 == 0).select("doc_id")
+    n_victims = victims.count()
+    delete_docs(spark, path, victims)
+
+    def guarded_open(file, mode="r", *args, **kwargs):
+        name = os.path.basename(str(file))
+        if "w" in mode and name.startswith("seg_") and name.endswith(".json"):
+            raise AssertionError(f"in-place write to committed manifest {name}")
+        return builtins.open(file, mode, *args, **kwargs)
+
+    monkeypatch.setattr(segments, "open", guarded_open, raising=False)
+    merge_segments(spark, path)
+    monkeypatch.undo()
+
+    (man,) = _read_manifest(path).values()
+    assert man["n_docs"] == corpus.count() - n_victims
+    assert open_segments(spark, path, corpus, transcript_schema()).doc_count == man["n_docs"]
+
+
 def test_second_merge_repacks_in_doc_order(spark, corpus, tmp_path_factory):
     """Regression (round-2 deep review): merge #2 mixes the MERGED_BASE
     segment (LOWEST doc ids, HIGHEST segment id) with newer stream

@@ -11,7 +11,6 @@ push unchecked entries past the window.
 
 from whoosh_spark.entry_queries import (
     _WINDOW_DEPRIORITIZE,
-    _WINDOW_FIRST,
     _correctness_history,
     _driver_window_order,
     registry,
@@ -64,11 +63,13 @@ def test_deprioritized_twins_follow_the_never_checked_tier():
 
 
 def test_fallback_order_without_history():
+    # no history: every entry is never-checked (tier 0) and the
+    # deprioritized twins are tier 0.5 — registration order, twins last
     names = list(registry())
     order = _driver_window_order(names, {})
-    assert sorted(order) == sorted(names)
-    head = [n for n in _WINDOW_FIRST if n in set(names)]
-    assert order[: len(head)] == head
+    demoted = set(_WINDOW_DEPRIORITIZE)
+    assert order == ([n for n in names if n not in demoted]
+                     + [n for n in names if n in demoted])
 
 
 def test_order_is_a_permutation():

@@ -1214,13 +1214,9 @@ _REGISTRY_CACHE: dict | None = None
 # `_WINDOW_DEPRIORITIZE` pins the named degenerate twins to
 # the back of the never-checked tier so the window spends its slots on
 # distinct operators first (the twins' machinery is already driven by
-# their full-fidelity siblings in the same window).
-#
-# `_WINDOW_FIRST` below is the historical round-4 hand-maintained order,
-# kept (a) as the deterministic fallback when no CORRECTNESS_r*.json is
-# present next to the package (fresh checkouts, CI) and (b) as the
-# audit trail for rounds 1-4. The generated order supersedes it when
-# history files exist.
+# their full-fidelity siblings in the same window). With no history
+# files (a fresh checkout) every entry is never-checked, so the order is
+# registration order with the twins last.
 
 _WINDOW_DEPRIORITIZE = [
     # n=20 twin of facet_overlap_topn: same operator, same oracle shape.
@@ -1286,176 +1282,10 @@ def _driver_window_order(names: list[str],
     Ascending `_window_tier` over ``history`` (`_correctness_history`
     shape): failed last time first, then never checked, then oldest
     checked. Within a tier, registration order (deterministic) is kept.
-    Falls back to the hand-maintained round-4 `_WINDOW_FIRST` order when
-    the history is empty.
     """
-    if not history:
-        names_set = set(names)
-        head = [n for n in _WINDOW_FIRST if n in names_set]
-        head_set = set(head)
-        return head + [n for n in names if n not in head_set]
     demoted = set(_WINDOW_DEPRIORITIZE)
     pos = {n: i for i, n in enumerate(names)}
     return sorted(names, key=lambda n: (_window_tier(n, history, demoted), pos[n]))
-
-
-# Historical round-4 hand-maintained window order (fallback + audit
-# trail; superseded by _driver_window_order when history files exist):
-# (1) slot 1: text_bpe_encode — r3's one red row, re-shaped to a flat
-#     schema (entry_pipeline.py projects tokens -> space-joined string)
-#     AND converted from rows-only to an EXACT oracle (recursive-CTE
-#     mirror of the full train->encode recurrence), so the driver now
-#     hash-checks it;
-# (2) slots 2-11: brand-new r4 entries (TA-routed flagship shape, the
-#     German/Spanish/French/Italian stemmers, the Double Metaphone
-#     phonetic search over the r4-fixed word-boundary rules, the BiWord
-#     shingle search, the delete_by_term masked search) and the two
-#     entries whose only driver rows are stale r2 `no_oracle` records
-#     from BEFORE their r3 oracle conversions (stemmed_search_topk's
-#     derived-corpus oracle, full-probe ann_ivf_topk);
-# (3) slots 12-48: the 37 registry entries that have NEVER had a driver
-#     row in any round (r1+r2+r3 union = 128 names; registry minus those
-#     = exactly this list);
-# (4) slots 49-50: entries riding round-4-CHANGED code — the rewritten
-#     indexed-percolation kernel (both tiers). The other r4-touched
-#     paths (TA executor hooks, refactored stem-oracle builder) are
-#     already exercised by the group-2/3 names above; their multi-green
-#     core representatives (term/and/or/phrase _bm25_topk,
-#     snowball_search_topk) sit just past the boundary.
-# Everything past slot 50 has a green r1/r2/r3 driver row on code
-# unchanged this round; the full registry is also pytest-verified vs
-# DuckDB on HEAD every round (tests/test_entry_oracle.py).
-_WINDOW_FIRST = [
-    # -- (1) the r3 red row, re-shaped --
-    "text_bpe_encode",
-    # -- (2) new r4 entries + stale-row oracle conversions --
-    "turns_search_mixed_topk", "german_search_topk", "spanish_search_topk",
-    "french_search_topk", "italian_search_topk", "dmetaphone_search_topk",
-    "biword_search_topk", "delete_search_topk",
-    "stemmed_search_topk", "ann_ivf_topk",
-    # -- (3) the 37 never-driver-checked entries --
-    "ann_ivf_probe_topk", "batch_query_topk",
-    "conv_assembled", "conv_exact_dedup", "conv_stats", "conv_truncate",
-    "conv_windows",
-    "copyfield_parse_topk",
-    "dedup_cc_incremental", "dedup_cc_sweep", "dedup_cluster_full_pairs",
-    "dedup_semantic_sweep",
-    "facet_query_buckets", "highlight_whole_upper", "or_minmatch_topk",
-    "pipeline_curation", "pipeline_mixture_report",
-    "regex_bm25_topk",
-    "sample_hash_frac", "sample_proportional_lang", "sample_stratified_lang",
-    "sample_weighted_nchars",
-    "span_before_topk", "span_contains_topk", "span_not_topk", "span_or_topk",
-    "text_contamination_pairs", "text_redact_pii", "text_repetition_stats",
-    "text_unigram_logprob",
-    "turns_batch_default_topk", "turns_batch_mixed_topk",
-    "turns_conv_children", "turns_search_default_topk",
-    "turns_wand_batch_topk", "turns_wand_dismax_topk",
-    "turns_wand_phrase_topk",
-    # -- (4) round-4-changed code paths --
-    "percolate_indexed_matches", "percolate_matches",
-    # ---- 50-slot boundary ----
-    # Slots 51-65: the last fifteen r4 entries (merge-expunge lexicon,
-    # update_document lexicon, compat facade search, Sequence/Ordered
-    # span constructors, ReverseTextFilter search, CommaSeparatedTokenizer
-    # lexicon, final()-hook weighting, IntraWord FANCY search, and the
-    # six that complete the analysis-chain oracle coverage: CompoundWord,
-    # Substitution, accent fold, CharsetTokenizer, DelimitedAttribute
-    # boost, PathTokenizer) — the head is full with the never-checked
-    # backlog, so these wait for the r5 window; they are
-    # pytest-oracle-verified on HEAD (tests/test_entry_oracle.py) like
-    # everything else.
-    "merged_lexicon_stats", "upsert_lexicon_stats", "compat_search_topk",
-    "sequence_topk", "ordered_anywhere_topk",
-    "reverse_search_topk", "commasep_lexicon", "final_hook_topk",
-    "intraword_search_topk",
-    "compound_search_topk", "substitution_search_topk",
-    "accentfold_search_topk", "charset_tokenize_topk",
-    "delimited_boost_topk", "path_lexicon",
-    # Slots 66-76: the r4-session-3 language-analyzer entries — Russian
-    # (Cyrillic-prelude derived-corpus oracle), Portuguese, Swedish,
-    # Norwegian, Danish, Dutch, Romanian, Hungarian, Finnish (the
-    # COMPLETE snowball family), and ISRI Arabic (Arabic-prelude oracle);
-    # same r5-window wait as slots 51-65.
-    "russian_search_topk", "portuguese_search_topk",
-    "swedish_search_topk", "norwegian_search_topk", "danish_search_topk",
-    "dutch_search_topk", "romanian_search_topk", "hungarian_search_topk",
-    "finnish_search_topk", "arabic_search_topk",
-    # (also waiting on the r5 window: ann_ivf_pq_lossless — the r4-late
-    # PQ exact twin — plus the five r4-final-session entries
-    # nb_quality_weights / nb_quality_scores (NB classifier tier),
-    # sample_shard_shuffle, conv_qa_gate, and emb_lang_centroids, and the
-    # r4-tail additions span_condition_topk / key_terms_from_text /
-    # text_c4_line_filter / collapse_order_topk / sorted_by_translate /
-    # spell_suggest_words / text_line_shape_stats / facet_overlap_top20 /
-    # text_dedup_lines / sample_temperature_lang / facet_overlap_topn /
-    # turns_context_expand / turns_context_assemble /
-    # score_breakdown_doc; all
-    # registered past this
-    # list so they sort after the named slots, all pytest-oracle-verified
-    # at sf0.001/0.01 AND hash-verified at the sf0.1 stress tier)
-    "snowball_search_topk", "term_bm25_topk",
-    "and_bm25_topk", "or_bm25_topk", "phrase_bm25_topk", "every_count",
-    # previously-green entries, most-recently-exercised families first
-    "search_after_page2", "text_bpe_encode_fixed", "pipeline_pack_bins_uniform",
-    "sketch_distinct_hll", "sketch_term_counts_cm",
-    "sketch_quantiles_value", "sketch_bloom_prefilter",
-    "text_strip_html", "text_chunk_overlap",
-    "sample_upsample_repeat", "complete_prefix_topk", "facet_stats_by_lang",
-    "facet_significant_terms", "facet_cardinality_source",
-    "facet_quantiles_nchars",
-    "hybrid_rrf_topk", "ann_mmr_lambda1", "ann_mmr_diverse_topk",
-    "facet_top3_by_lang",
-    "text_bpe_word_counts", "doc_keywords_top3",
-    "conv_sessionize", "conv_session_stats", "conv_response_latency",
-    "conv_tool_stats", "stream_session_windows", "turns_asof_events",
-    "turns_lookback_events", "events_hypertable_rollup", "sketch_distinct_users",
-    "pipeline_pack_bins", "turns_wand_range_topk",
-    "text_paragraph_dedup", "text_bigram_logprob", "text_dsir_logweights",
-    "text_dsir_gumbel_topk", "sample_token_budget", "conv_loss_spans",
-    "conv_neardup_pairs", "dedup_best_canonical",
-    "results_setops_topk",
-    "text_dup_substring_spans", "text_substring_dedup_clean",
-    "pipeline_pack_sequences", "text_exact_ngram_decontam",
-    "stream_window_counts",
-    "variations_topk", "variations_irregular_topk",
-    "daterange_nl", "multifield_or_topk",
-    "streaming_build_lexicon",
-    "prefix_bm25_topk", "wildcard_bm25_topk", "fuzzy_bm25_topk",
-    "turns_wand_term_topk", "turns_wand_or_topk", "turns_wand_and_topk",
-    "turns_lexicon_stats", "lexicon_stats", "turns_conv_best_topk",
-    "highlight_snippets", "ann_ivf_pq_topk", "dedup_cluster_cosine_pairs",
-    "phrase_slop2_topk", "otherwise_fallback_topk",
-    "not_complement_count",
-    "andnot_bm25_topk", "andmaybe_bm25_topk", "require_bm25_topk",
-    "dismax_bm25_topk", "or_scale_coord_topk", "termrange_bm25_topk",
-    "idfield_and_text_topk", "boost_group_topk",
-    "numericrange_docs", "daterange_events",
-    "facet_count_by_lang", "facet_best_by_lang",
-    "collapse_by_source_topk", "filter_mask_topk",
-    "sorted_by_lang", "page2_or_query", "matched_terms",
-    "span_near_ordered_topk", "span_first_topk", "ngram_substring_topk",
-]
-# Window math: slots 1-50 = 1 red-row fix + 10 new/re-oracled + 37
-# never-checked + 2 r4-changed-code entries. After this round every
-# oracle-backed registry entry has at least one driver row across
-# rounds (the VERDICT r3 #2 definition of done).
-#
-# r4 SESSION-2 addendum (continuation container): seven more entries
-# registered past the named list — text_collocations_llr,
-# ann_rocchio_topk, multilang_search_topk, sketch_setops_users,
-# turns_trending_terms, text_ngram_novelty, search_eval_metrics — each
-# hash-verified vs DuckDB at sf0.001/0.01 AND the sf0.1 stress tier
-# in-session, plus the percolate entries re-verified on the session-2
-# grouped-leaf kernel (Or(scale=) + two-level CNF/DNF;
-# percolate_indexed_matches gained the scaled_or oracle arm). Projected
-# r5 backlog after this round's driver window: 52 never-checked names
-# (recomputed against CORRECTNESS_r01-03 + the slot-1..50 list) — TWO
-# over the 50-slot window; the natural overflow candidates are
-# facet_overlap_top20 (the n=20 twin of facet_overlap_topn, same
-# operator and oracle shape) and ann_ivf_pq_lossless (degenerate twin
-# of the rows-only PQ tier whose machinery ann_ivf_topk already
-# drives), which the r5 reorder should leave past the boundary.
 
 
 def registry() -> dict:

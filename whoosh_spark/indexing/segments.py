@@ -431,6 +431,20 @@ def _manifest_dir(path: str) -> str:
     return os.path.join(path, "_manifest")
 
 
+def _commit_json(dst: str, obj: dict) -> None:
+    """Write ``obj`` to a tmp file, then rename it over ``dst``: a crash
+    leaves the old file or the new one, never a truncated one."""
+    tmp = dst + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, dst)
+
+
+def _commit_manifest(path: str, manifest: dict) -> None:
+    _commit_json(os.path.join(_manifest_dir(path),
+                              f"seg_{manifest['segment_id']}.json"), manifest)
+
+
 def _read_manifest(path: str) -> dict[int, dict]:
     out = {}
     mdir = _manifest_dir(path)
@@ -522,10 +536,7 @@ def build_segments(
             },
             "status": "committed",
         }
-        tmp = os.path.join(_manifest_dir(path), f"seg_{seg_id}.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, os.path.join(_manifest_dir(path), f"seg_{seg_id}.json"))
+        _commit_manifest(path, manifest)
         return seg_id, manifest
 
     pending = [s for s in range(n_segments) if s not in done]
@@ -713,10 +724,7 @@ def _finalize(spark: SparkSession, path: str, doc_count: int,
     if gen is not None:
         meta["stats"] = {"generation": gen, "segments": active,
                          "layers": layers}
-    tmp = os.path.join(path, "_meta.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(path, "_meta.json"))
+    _commit_json(os.path.join(path, "_meta.json"), meta)
     # superseded layers are crash-safe garbage once the swap landed
     import shutil
 
@@ -956,7 +964,9 @@ def merge_segments(
         "segment_id": new_id,
         "doc_lo": min(done[s]["doc_lo"] for s in segment_ids),
         "doc_hi": max(done[s]["doc_hi"] for s in segment_ids),
-        "n_docs": sum(done[s]["n_docs"] for s in segment_ids),
+        # expunging a doc removes it from n_docs and doc_count (Whoosh
+        # optimize semantics: stats recomputed from the rewritten segments)
+        "n_docs": sum(done[s]["n_docs"] for s in segment_ids) - n_expunged,
         "n_postings": int(stats["n_postings"] or 0),
         "n_blocks": int(stats["n_blocks"] or 0),
         "n_terms": int(stats["n_terms"] or 0),
@@ -972,20 +982,11 @@ def merge_segments(
         },
         "status": "committed",
     }
-    tmp = os.path.join(_manifest_dir(path), f"seg_{new_id}.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, os.path.join(_manifest_dir(path), f"seg_{new_id}.json"))
+    _commit_manifest(path, manifest)
     done[new_id] = manifest
     with open(os.path.join(path, "_meta.json")) as f:
-        doc_count = json.load(f)["doc_count"]
-    # expunging a doc removes it from doc_count too (Whoosh optimize
-    # semantics: stats recomputed from the rewritten segments)
+        doc_count = json.load(f)["doc_count"] - n_expunged
     if n_expunged:
-        doc_count -= n_expunged
-        manifest["n_docs"] -= n_expunged
-        with open(os.path.join(_manifest_dir(path), f"seg_{new_id}.json"), "w") as f:
-            json.dump(manifest, f)
         # Expunged ids become TOMBSTONES: their postings are physically gone
         # from the new segment, but the stored docs table (external to the
         # index dir) still holds their rows, so live_docs()/Every/Not must

@@ -41,9 +41,50 @@ row-group min/max on the sorted term column — WAND here saves decode +
 score work on long posting lists, exactly the role block skipping plays in
 the reference (I/O seek saving), with ~(k / corpus) of the postings decoded
 for hot terms.
+
+**Kernel input.** ``wand_topk``, ``wand_phrase_topk`` and
+``wand_topk_many`` build it the same way (:func:`_kernel_input`), as one
+Spark action:
+
+- The block rows of the query's (field, term) pairs, scanned with the term
+  predicate pushed down (row-group min/max on the sorted term column).
+  Position payloads are dropped before the scan unless the phrase kernel
+  reads them.
+- Each row carries its term's exact integer ``df``, broadcast-joined from
+  the terms table — no separate per-query stats job. The kernel computes
+  idf with the same Python ``scoring.idf`` the executor uses, so scores
+  are bit-identical. A term missing from the index brings no rows: OR
+  scores the rest, AND and phrases match nothing.
+- ``doc_range=(lo, hi)`` (term kernels only) restricts candidates to a
+  docnum slice (``SegmentedIndex.doc_range_for``): whole blocks outside it
+  prune on their min/max metadata before the scan, straddling blocks are
+  filtered after decode. df/idf/avgdl stay corpus-global (Whoosh
+  FilterMatcher semantics), and block bounds only overestimate, so
+  θ-pruning stays exact.
+- Kernel groups are ``(segment_id[, _shard])``, prefixed by ``_qid`` on
+  the batch path, which broadcast-joins a (term -> query_id) map so a
+  shared term's rows replicate to every query using it. With
+  ``shard_docs`` set, shards are doc-disjoint ranges of that many docs: a
+  block straddling a boundary replicates to each shard it touches and is
+  range-filtered after decode, so every doc's postings for all query terms
+  sit in one group and per-group top-k -> global top-k stays exact (the
+  per-segment argument, one level down). ``"auto"`` sizes shards to ~4
+  groups per core with a 65536-doc floor: a small index keeps one group per
+  segment (the plain per-segment plan), while a big or fully merged index
+  stays parallel — a 1-segment sf1 index served a WAND query in 23.9 s
+  before sharding because per-segment grouping put the kernel on one task
+  (BENCH.md round-3 addendum). ``None`` is one group per segment; an int
+  pins the shard size (~10^7 at 10^9-doc segments).
+- Deleted doc ids join the same shuffle as marker rows (``_del_doc`` not
+  null), routed to their segment and shard by the manifest doc ranges and,
+  on the batch path, replicated to every query. The delete set never
+  reaches the driver. Kernels strip the markers and mask those docs right
+  after decode; block bounds only overestimate, so results stay exact.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -52,24 +93,136 @@ from pyspark.sql import functions as F
 
 from whoosh_spark.indexing.segments import SegmentedIndex
 from whoosh_spark.search.scoring import BM25F, bm25_np, idf as idf_fn
-from whoosh_spark.util import segmented_cumsum, varint_decode
+from whoosh_spark.util import inline_rows, segmented_cumsum, varint_decode
 
 
-def _bm25_np(idf, tf, dl, avgdl, B, K1):
-    """Same expression ORDER as scoring.score_expr so Spark-side and
-    WAND-side float64 results are bit-identical."""
-    return bm25_np(idf, tf, dl, avgdl, B, K1)
+class _KernelInput(NamedTuple):
+    data: DataFrame  # block rows (+ delete markers), one group per kernel call
+    group_cols: list[str]
+    shard_docs: int | None  # "auto" resolved
+    n: int  # doc_count_all
+    avgdl: float
+    B: float
+    K1: float
 
 
-def _decode_rows(rows: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Decode block rows -> (doc_ids, tf, dl, row_term_codes) flat arrays."""
+def _kernel_input(ix: SegmentedIndex, fieldname: str,
+                  weighting: BM25F | None, terms: list[str],
+                  shard_docs: int | str | None, doc_range: tuple | None = None,
+                  positions: bool = False,
+                  queries: "dict[int, list[str]] | None" = None) -> _KernelInput:
+    """Check the field and weighting, then lay out the kernel input
+    described in the module docstring. ``positions`` keeps the position
+    payloads (phrase kernel); ``queries`` (query_id -> terms) adds the
+    batch path's (term -> query_id) join and per-query delete markers."""
+    w = weighting or BM25F()
+    if getattr(w, "use_final", False):
+        why = ("" if positions or queries is not None else
+               " (non-monotone transforms invalidate block bounds, same as "
+               "the reference disabling block quality under use_final)")
+        raise ValueError("final()-hook models are excluded from block-max "
+                         f"pruning{why} — use Searcher.search instead")
+    fs = ix.schema[fieldname]
+    if not fs.scorable:
+        hint = "" if queries is not None else " — use Searcher.search"
+        raise ValueError(
+            f"block-max {'phrase WAND' if positions else 'WAND'} needs a "
+            f"scorable field; {fieldname!r} is not{hint}")
+    # the ONE B-resolution order (weighting.field_B > fs.B > weighting.B),
+    # shared with score_expr/score_np so WAND == executor for every config
+    B, K1 = w._b_for(fs), w.K1
+    avgdl = ix.avg_field_length(fieldname)
+    n = ix.doc_count
+    wanted = (F.col("field") == fieldname) & F.col("term").isin(terms)
+    stats = ix.terms.where(wanted).select("term", "df")
+    blocks = ix.blocks if positions else ix.blocks.drop("pos_counts", "pos_vals")
+    blocks = blocks.where(wanted).join(F.broadcast(stats), "term")
+    group_cols = ["segment_id"]
+    if queries is not None:
+        qmap = inline_rows(ix.spark,
+                           [(t, q) for q, ts in queries.items() for t in ts],
+                           "term string, _qid long")
+        blocks = blocks.join(F.broadcast(qmap), "term")
+        group_cols.insert(0, "_qid")
+    if doc_range is not None:
+        lo, hi = doc_range
+        if lo >= hi:
+            raise ValueError(f"empty doc_range {doc_range}")
+        blocks = blocks.where((F.col("max_doc") >= lo) & (F.col("min_doc") < hi))
+    if shard_docs == "auto":
+        par = max(ix.spark.sparkContext.defaultParallelism, 1)
+        # below the floor every doc lands in shard 0 anyway — skip the
+        # explode entirely and keep the plain per-segment plan
+        shard_docs = max(-(-n // (4 * par)), 65536) if n > 65536 else None
+    if shard_docs:
+        blocks = blocks.withColumn(
+            "_shard",
+            F.explode(F.sequence(F.floor(F.col("min_doc") / shard_docs),
+                                 F.floor(F.col("max_doc") / shard_docs))),
+        )
+        group_cols.append("_shard")
+    deleted = getattr(ix, "deleted", None)
+    if deleted is not None:
+        marks = deleted.join(
+            F.broadcast(ix.seg_ranges()),
+            (F.col("doc_id") >= F.col("doc_lo")) & (F.col("doc_id") < F.col("doc_hi")),
+        ).select("segment_id", F.col("doc_id").alias("_del_doc"))
+        if queries is not None:
+            marks = marks.withColumn("_qid", F.explode(F.array(
+                *[F.lit(q).cast("long") for q in queries])))
+        if shard_docs:
+            marks = marks.withColumn(
+                "_shard", F.floor(F.col("_del_doc") / shard_docs).cast("long"))
+        blocks = blocks.withColumn("_del_doc", F.lit(None).cast("long")).unionByName(
+            marks, allowMissingColumns=True)
+    return _KernelInput(blocks, group_cols, shard_docs, n, avgdl, B, K1)
+
+
+def _empty() -> pd.DataFrame:
+    return pd.DataFrame({"doc_id": pd.Series([], dtype=np.int64),
+                         "score": pd.Series([], dtype=np.float64)})
+
+
+def _open_group(pdf: pd.DataFrame, shard_docs: int | None):
+    """Split one kernel group into (block rows, deleted doc ids or None,
+    the group's [lo, hi) shard bounds or None); None when the group holds
+    no block row."""
+    deleted = None
+    if "_del_doc" in pdf.columns:
+        marks = pdf["_del_doc"].notna()
+        if marks.any():
+            deleted = np.unique(pdf.loc[marks, "_del_doc"].to_numpy(dtype=np.int64))
+            pdf = pdf[~marks]
+    if len(pdf) == 0:
+        return None
+    shard = None
+    if shard_docs and "_shard" in pdf.columns:
+        sh = int(pdf["_shard"].iloc[0])
+        shard = (sh * shard_docs, (sh + 1) * shard_docs)
+    return pdf, deleted, shard
+
+
+def _keep_mask(doc: np.ndarray, deleted, *ranges) -> np.ndarray:
+    """Mask of decoded docs the group scores: inside every given [lo, hi)
+    range (shard, doc_range; None = unbounded) and not deleted."""
+    keep = np.ones(doc.size, dtype=bool)
+    for r in ranges:
+        if r is not None:
+            keep &= (doc >= r[0]) & (doc < r[1])
+    if deleted is not None:
+        keep &= ~np.isin(doc, deleted)
+    return keep
+
+
+def _decode_blocks(rows: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Block rows (n, doc_deltas, weights, dls) -> flat (doc, tf, dl)
+    arrays, postings in row order."""
     n_per = rows["n"].to_numpy(dtype=np.int64)
     starts = np.concatenate(([0], np.cumsum(n_per)))[:-1]
     doc = segmented_cumsum(varint_decode(b"".join(rows["doc_deltas"])), starts)
     tf = np.frombuffer(b"".join(rows["weights"]), dtype=np.float32).astype(np.float64)
     dl = np.frombuffer(b"".join(rows["dls"]), dtype=np.uint16).astype(np.float64)
-    tcodes = np.repeat(rows["_tcode"].to_numpy(dtype=np.int64), n_per)
-    return doc, tf, dl, tcodes
+    return doc, tf, dl
 
 
 def _topk_partial(doc: np.ndarray, contrib: np.ndarray, tc: np.ndarray):
@@ -101,47 +254,18 @@ def _topk_partial_max(doc: np.ndarray, contrib: np.ndarray, tc: np.ndarray):
 
 def make_segment_wand(terms: list[str], n_docs: int, avgdl: float, B: float,
                       K1: float, k: int, mode: str, prune: bool, seed_blocks: int,
-                      deleted: np.ndarray | None = None,
                       shard_docs: int | None = None,
                       doc_range: tuple | None = None):
-    """Build the per-segment applyInPandas function. Each block row arrives
-    with its term's exact integer ``df`` attached (broadcast-joined from
-    the terms table by wand_topk), and the kernel computes idf with the
-    SAME Python ``idf_fn`` the executor/driver path uses — bit-identical
-    scores with NO per-query stats round-trip job (searching.py::
-    Searcher.idf memoization analogue, pushed into the one kernel action).
-
-    Deleted doc ids arrive as MARKER ROWS (``_del_doc`` non-null) unioned
-    into the segment's block rows by wand_topk — the delete set shuffles
-    with the data instead of riding a driver-collected closure. They are
-    masked right after decode — bounds stay valid (they only overestimate),
-    results stay exact. The ``deleted`` array parameter is a test hook with
-    the same semantics."""
+    """Build the per-group applyInPandas function over the kernel input
+    (module docstring): idf per term from the attached ``df``, block
+    bounds, then the seed / prune / refine passes above."""
     n_terms = len(terms)
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        nonlocal_deleted = deleted
-        if "_del_doc" in pdf.columns:
-            dmask = pdf["_del_doc"].notna()
-            if dmask.any():
-                marked = np.unique(pdf.loc[dmask, "_del_doc"].to_numpy(dtype=np.int64))
-                nonlocal_deleted = (
-                    marked if deleted is None
-                    else np.union1d(marked, deleted)
-                )
-                pdf = pdf[~dmask]
-        if len(pdf) == 0:
-            return pd.DataFrame({"doc_id": pd.Series([], dtype=np.int64),
-                                 "score": pd.Series([], dtype=np.float64)})
-        # doc-range shard bounds (horizontal WAND): the group owns exactly
-        # [shard*C, (shard+1)*C); blocks straddling the boundary arrive
-        # replicated and are range-filtered after decode, so every doc's
-        # postings for ALL query terms are complete within one group
-        shard_lo = shard_hi = None
-        if shard_docs and "_shard" in pdf.columns:
-            sh = int(pdf["_shard"].iloc[0])
-            shard_lo, shard_hi = sh * shard_docs, (sh + 1) * shard_docs
-        deleted_np = nonlocal_deleted
+        group = _open_group(pdf, shard_docs)
+        if group is None:
+            return _empty()
+        pdf, deleted, shard = group
         tcode_map = {t: c for c, t in enumerate(terms)}
         pdf = pdf.assign(_tcode=pdf["term"].map(tcode_map))
         # idf per term from the attached exact integer df — same scalar
@@ -152,8 +276,8 @@ def make_segment_wand(terms: list[str], n_docs: int, avgdl: float, B: float,
         df_col = pdf["df"].to_numpy(dtype=np.int64)
         for code in np.unique(tc_col):
             idfs[code] = idf_fn(n_docs, int(df_col[tc_col == code][0]))
-        ub = _bm25_np(
-            idfs[pdf["_tcode"].to_numpy(dtype=np.int64)],
+        ub = bm25_np(
+            idfs[tc_col],
             pdf["max_weight"].to_numpy(dtype=np.float64),
             pdf["min_dl"].to_numpy(dtype=np.float64),
             avgdl, B, K1,
@@ -161,21 +285,12 @@ def make_segment_wand(terms: list[str], n_docs: int, avgdl: float, B: float,
         pdf = pdf.assign(_ub=ub)
 
         def score_rows(rows: pd.DataFrame):
-            doc, tf, dl, tc = _decode_rows(rows)
-            if shard_lo is not None:
-                inside = (doc >= shard_lo) & (doc < shard_hi)
-                doc, tf, dl, tc = doc[inside], tf[inside], dl[inside], tc[inside]
-            if doc_range is not None:
-                # doc-subset search ([lo, hi) slice): candidates restricted
-                # AFTER decode, stats/idf stay GLOBAL (FilterMatcher
-                # semantics); block bounds only overestimate, so the
-                # θ-prune stays exact
-                inr = (doc >= doc_range[0]) & (doc < doc_range[1])
-                doc, tf, dl, tc = doc[inr], tf[inr], dl[inr], tc[inr]
-            if deleted_np is not None and deleted_np.size:
-                live = ~np.isin(doc, deleted_np)
-                doc, tf, dl, tc = doc[live], tf[live], dl[live], tc[live]
-            return doc, _bm25_np(idfs[tc], tf, dl, avgdl, B, K1), tc
+            doc, tf, dl = _decode_blocks(rows)
+            tc = np.repeat(rows["_tcode"].to_numpy(dtype=np.int64),
+                           rows["n"].to_numpy(dtype=np.int64))
+            keep = _keep_mask(doc, deleted, shard, doc_range)
+            doc, tf, dl, tc = doc[keep], tf[keep], dl[keep], tc[keep]
+            return doc, bm25_np(idfs[tc], tf, dl, avgdl, B, K1), tc
 
         agg = _topk_partial_max if mode == "max" else _topk_partial
 
@@ -220,8 +335,7 @@ def make_segment_wand(terms: list[str], n_docs: int, avgdl: float, B: float,
 
         # ---- prune: term-max WAND test on the remaining blocks ----
         term_max = np.full(n_terms, 0.0)
-        tc_all = pdf["_tcode"].to_numpy(dtype=np.int64)
-        np.maximum.at(term_max, tc_all, pdf["_ub"].to_numpy())
+        np.maximum.at(term_max, tc_col, pdf["_ub"].to_numpy())
         others = term_max.sum() - term_max  # Σ_{t'≠t} term_max(t')
         lhs = rest["_ub"].to_numpy() + others[rest["_tcode"].to_numpy(dtype=np.int64)]
         survive = lhs >= theta
@@ -300,130 +414,24 @@ def wand_topk(
     shard_docs: int | str | None = "auto",
     doc_range: tuple | None = None,
 ) -> DataFrame:
-    """Top-k (doc_id, score) for an Or/And/DisMax of terms via per-segment
+    """Top-k (doc_id, score) for an Or/And/DisMax of terms via per-group
     WAND. ``mode``: "or" sums matching-term scores (UnionMatcher), "and"
     keeps docs matching every term (IntersectionMatcher), "max" takes the
     per-doc maximum (wrappers.py::DisMaxMatcher, tiebreak=0) with the
     tighter single-block prune bound.
 
-    Plan shape: blocks parquet scan pruned to the query terms (row-group
-    min/max) -> shuffle by segment_id (tiny: only the query's block rows
-    move) -> per-segment vectorized WAND -> global
-    orderBy(score desc, doc_id asc).limit(k) over ≤ k rows per segment.
-
-    ``shard_docs`` is the horizontal-scale knob: with it set, the group key
-    becomes (segment_id, doc-range shard) so one zipfian query term can no
-    longer concentrate a whole segment's blocks on one task. Shards are
-    doc-DISJOINT ranges (blocks straddling a boundary replicate to both
-    shards and range-filter after decode), so per-shard top-k -> global
-    merge stays exact — the same argument that makes per-segment WAND
-    exact, applied one level down (pinned ≡ unsharded in
-    tests/test_segments.py).
-
-    The default ``"auto"`` sizes shards to ~4 kernel groups per core with
-    a 65536-doc floor: small/test corpora keep one shard per segment
-    (identical plan to the unsharded path), while a big index stays
-    parallel even when segment count < cores — measured at the 20M-turn
-    sf1 rehearsal, a fully-merged (1-segment) index served the same WAND
-    query 23.9 s -> at multi-segment speed once sharded, because per-
-    segment grouping alone had collapsed the kernel onto one task
-    (BENCH.md round-3 addendum). ``None`` = exactly one group per
-    segment; an int pins the shard size (set ~10^7 at 10^9-doc segments).
-
-    ``doc_range=(lo, hi)`` restricts candidates to a docnum slice (time
-    window / conversation range via ``SegmentedIndex.doc_range_for``):
-    whole blocks outside the slice prune on min/max metadata before the
-    scan, straddling blocks filter after decode; df/idf/avgdl stay
-    corpus-global (FilterMatcher semantics) and block bounds only
-    overestimate, so θ-pruning stays exact (pinned vs the unpruned slice
-    in tests/test_segments.py).
+    Plan shape: the kernel input (module docstring; ``shard_docs`` and
+    ``doc_range`` there) -> per-group vectorized WAND -> global
+    orderBy(score desc, doc_id asc).limit(k) over ≤ k rows per group.
+    Sharded ≡ unsharded and the ``doc_range`` slice ≡ its unpruned
+    evaluation are pinned in tests/test_segments.py.
     """
-    w = weighting or BM25F()
-    if getattr(w, "use_final", False):
-        raise ValueError(
-            "final()-hook models are excluded from block-max pruning "
-            "(non-monotone transforms invalidate block bounds, same as the "
-            "reference disabling block quality under use_final) — use "
-            "Searcher.search instead"
-        )
-    fs = ix.schema[fieldname]
-    if not fs.scorable:
-        raise ValueError(
-            f"block-max WAND needs a scorable field; {fieldname!r} is not — "
-            "use Searcher.search"
-        )
-    # the ONE B-resolution order (weighting.field_B > fs.B > weighting.B),
-    # shared with score_expr/score_np so WAND == executor for every config
-    B = w._b_for(fs)
-    K1 = w.K1
-    avgdl = ix.avg_field_length(fieldname)
-    n = ix.doc_count
     terms = list(dict.fromkeys(terms))  # dedupe, keep order (tcode identity)
-    # Per-term df rides ON the block rows via a broadcast join against the
-    # terms table — the same pushed-down, row-group-pruned point read the
-    # old prefetch job did, but folded into the ONE kernel action instead
-    # of a separate driver round-trip job per query (the ~0.3-0.5 s/query
-    # orchestration floor measured in BENCH.md "Query-side scaling").
-    # Globally-missing terms simply contribute no rows: OR scores the rest,
-    # AND's per-doc count == len(terms) test goes empty — same semantics
-    # as the old driver-side early returns, now decided inside the plan.
-    stats = ix.terms.where(
-        (F.col("field") == fieldname) & F.col("term").isin(terms)
-    ).select("term", "df")
-    blocks = (
-        ix.blocks.drop("pos_counts", "pos_vals")
-        .where((F.col("field") == fieldname) & F.col("term").isin(terms))
-        .join(F.broadcast(stats), "term")
-    )  # WAND never reads positions; dropping pre-scan prunes the columns
-    if doc_range is not None:
-        # doc-subset search (time-slice / conversation-range over the
-        # docnum order): whole blocks outside [lo, hi) prune on their
-        # min/max metadata BEFORE the scan (row-group min/max seek), the
-        # kernel range-filters straddling blocks after decode; df/idf/
-        # avgdl stay corpus-global (Whoosh FilterMatcher semantics — a
-        # filter restricts candidates, never re-weights)
-        lo, hi = doc_range
-        if lo >= hi:
-            raise ValueError(f"empty doc_range {doc_range}")
-        blocks = blocks.where((F.col("max_doc") >= lo) & (F.col("min_doc") < hi))
-    if shard_docs == "auto":
-        par = max(ix.spark.sparkContext.defaultParallelism, 1)
-        # below the floor every doc lands in shard 0 anyway — skip the
-        # explode/filter entirely and keep the plain per-segment plan
-        shard_docs = max(-(-n // (4 * par)), 65536) if n > 65536 else None
-    group_cols = ["segment_id"]
-    if shard_docs:
-        blocks = blocks.withColumn(
-            "_shard",
-            F.explode(
-                F.sequence(
-                    F.floor(F.col("min_doc") / shard_docs),
-                    F.floor(F.col("max_doc") / shard_docs),
-                )
-            ),
-        )
-        group_cols.append("_shard")
-    deleted = getattr(ix, "deleted", None)
-    if deleted is not None:
-        # delete ids join the per-segment shuffle as marker rows (routed by
-        # the manifest doc ranges) — the set never touches the driver
-        rng = ix.seg_ranges()
-        marks = deleted.join(
-            F.broadcast(rng),
-            (F.col("doc_id") >= F.col("doc_lo")) & (F.col("doc_id") < F.col("doc_hi")),
-        ).select("segment_id", F.col("doc_id").alias("_del_doc"))
-        if shard_docs:
-            marks = marks.withColumn(
-                "_shard", F.floor(F.col("_del_doc") / shard_docs).cast("long")
-            )
-        data = blocks.withColumn("_del_doc", F.lit(None).cast("long")).unionByName(
-            marks, allowMissingColumns=True
-        )
-    else:
-        data = blocks
-    fn = make_segment_wand(terms, n, avgdl, B, K1, k, mode, prune, seed_blocks,
-                           shard_docs=shard_docs, doc_range=doc_range)
-    local = data.groupBy(*group_cols).applyInPandas(fn, "doc_id long, score double")
+    inp = _kernel_input(ix, fieldname, weighting, terms, shard_docs, doc_range)
+    fn = make_segment_wand(terms, inp.n, inp.avgdl, inp.B, inp.K1, k, mode,
+                           prune, seed_blocks, shard_docs=inp.shard_docs,
+                           doc_range=doc_range)
+    local = inp.data.groupBy(*inp.group_cols).applyInPandas(fn, "doc_id long, score double")
     return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
@@ -444,9 +452,9 @@ def make_segment_phrase_wand(words: list[str], n_docs: int, avgdl: float,
                              B: float, K1: float, k: int, slop: int,
                              prune: bool = True,
                              shard_docs: int | None = None,
-                             deleted: np.ndarray | None = None,
                              verify_chunk: int | None = None):
-    """Per-segment phrase top-k kernel (see wand_phrase_topk for the plan).
+    """Per-group phrase top-k kernel over the kernel input (module
+    docstring), positions kept.
 
     Three vectorized stages, each skipping work the reference's
     doc-at-a-time intersection+positions matcher (positional.py::Phrase ->
@@ -476,44 +484,22 @@ def make_segment_phrase_wand(words: list[str], n_docs: int, avgdl: float,
        SpanNear2 window (prev < x <= prev + slop) with no per-doc Python
        loop in the match test.
     """
-    n_slots = len(words)
     uniq_terms = list(dict.fromkeys(words))
     idf_slot_of = [uniq_terms.index(w) for w in words]
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": pd.Series([], dtype=np.int64),
-                              "score": pd.Series([], dtype=np.float64)})
-        dele = deleted
-        if "_del_doc" in pdf.columns:
-            dmask = pdf["_del_doc"].notna()
-            if dmask.any():
-                marked = np.unique(pdf.loc[dmask, "_del_doc"].to_numpy(dtype=np.int64))
-                dele = marked if dele is None else np.union1d(marked, dele)
-                pdf = pdf[~dmask]
-        if len(pdf) == 0:
-            return empty
-        shard_lo = shard_hi = None
-        if shard_docs and "_shard" in pdf.columns:
-            sh = int(pdf["_shard"].iloc[0])
-            shard_lo, shard_hi = sh * shard_docs, (sh + 1) * shard_docs
+        group = _open_group(pdf, shard_docs)
+        if group is None:
+            return _empty()
+        pdf, deleted, shard = group
         pdf = pdf.reset_index(drop=True)
         present = set(pdf["term"])
         if any(t not in present for t in uniq_terms):
-            return empty  # AND semantics: a word absent here matches nothing
+            return _empty()  # AND semantics: a word absent here matches nothing
         term_rows = {t: pdf[pdf["term"] == t] for t in uniq_terms}
         idfs_u = np.array([
             idf_fn(n_docs, int(term_rows[t]["df"].iloc[0])) for t in uniq_terms
         ])
-
-        def decode_term(rows: pd.DataFrame):
-            n_per = rows["n"].to_numpy(dtype=np.int64)
-            starts = np.concatenate(([0], np.cumsum(n_per)))[:-1]
-            doc = segmented_cumsum(varint_decode(b"".join(rows["doc_deltas"])), starts)
-            tf = np.frombuffer(b"".join(rows["weights"]), dtype=np.float32).astype(np.float64)
-            dl = np.frombuffer(b"".join(rows["dls"]), dtype=np.uint16).astype(np.float64)
-            rowrep = np.repeat(rows.index.to_numpy(), n_per)
-            inblk = np.arange(doc.size, dtype=np.int64) - np.repeat(starts, n_per)
-            return doc, tf, dl, rowrep, inblk
 
         # ---- stage 1: candidate intersection, cheapest word first ----
         order_terms = sorted(uniq_terms,
@@ -528,15 +514,17 @@ def make_segment_phrase_wand(words: list[str], n_docs: int, avgdl: float,
                 hi = np.searchsorted(C, rows["max_doc"].to_numpy(dtype=np.int64), side="right")
                 rows = rows[hi > lo]
                 if len(rows) == 0:
-                    return empty
-            arrs = decode_term(rows)
-            doc = arrs[0]
+                    return _empty()
+            doc, tf, dl = _decode_blocks(rows)
+            n_per = rows["n"].to_numpy(dtype=np.int64)
+            # each posting's block row (for the lazy position decode) and
+            # its slot inside that block
+            rowrep = np.repeat(rows.index.to_numpy(), n_per)
+            inblk = np.arange(doc.size, dtype=np.int64) - np.repeat(
+                np.cumsum(n_per) - n_per, n_per)
+            arrs = (doc, tf, dl, rowrep, inblk)
             if ti == 0:
-                m = np.ones(doc.size, dtype=bool)
-                if shard_lo is not None:
-                    m &= (doc >= shard_lo) & (doc < shard_hi)
-                if dele is not None and dele.size:
-                    m &= ~np.isin(doc, dele)
+                m = _keep_mask(doc, deleted, shard)
             else:
                 # candidate membership implies shard + delete filtering
                 m = np.isin(doc, C, assume_unique=False)
@@ -544,7 +532,7 @@ def make_segment_phrase_wand(words: list[str], n_docs: int, avgdl: float,
                 arrs = tuple(a[m] for a in arrs)
                 doc = arrs[0]
             if doc.size == 0:
-                return empty
+                return _empty()
             srt = np.argsort(doc)
             arrs = tuple(a[srt] for a in arrs)
             data[t] = arrs
@@ -561,7 +549,7 @@ def make_segment_phrase_wand(words: list[str], n_docs: int, avgdl: float,
         score = None
         for s, wd in enumerate(words):
             _, tf_t, dl_t, _, _ = data[wd]
-            contrib = _bm25_np(idfs_u[idf_slot_of[s]], tf_t, dl_t, avgdl, B, K1)
+            contrib = bm25_np(idfs_u[idf_slot_of[s]], tf_t, dl_t, avgdl, B, K1)
             score = contrib if score is None else score + contrib
 
         # ---- stage 3: score-ordered positional verify, early exit ----
@@ -627,7 +615,7 @@ def make_segment_phrase_wand(words: list[str], n_docs: int, avgdl: float,
                 if score[vorder[pos0]] <= kth:
                     break
         if not matched_docs:
-            return empty
+            return _empty()
         return _head_k(np.concatenate(matched_docs),
                        np.concatenate(matched_scores), k)
 
@@ -665,68 +653,19 @@ def wand_phrase_topk(
     positional index — are only varint-decoded for blocks the verify
     frontier actually touches).
 
-    Plan shape: blocks scan pruned to the phrase's terms (row-group
-    min/max on the sorted term column, positions KEPT) -> broadcast-join
-    per-term df -> groupBy (segment_id[, doc-range shard]) -> per-group
-    kernel -> global orderBy(score desc, doc_id asc).limit(k). Shard and
-    delete handling are identical to wand_topk (doc-disjoint shards with
-    straddling-block replication; deletes as marker rows). Fields indexed
-    without positions (phrase=False) return no matches, same as the
-    executor's null-positions semantics.
+    Plan shape: the kernel input with positions kept (module docstring) ->
+    per-group kernel -> global orderBy(score desc, doc_id asc).limit(k).
+    Fields indexed without positions (phrase=False) return no matches,
+    same as the executor's null-positions semantics.
     """
-    w = weighting or BM25F()
-    if getattr(w, "use_final", False):
-        raise ValueError(
-            "final()-hook models are excluded from block-max pruning — "
-            "use Searcher.search instead")
-    fs = ix.schema[fieldname]
-    if not fs.scorable:
-        raise ValueError(
-            f"block-max phrase WAND needs a scorable field; {fieldname!r} "
-            "is not — use Searcher.search")
+    inp = _kernel_input(ix, fieldname, weighting, list(dict.fromkeys(words)),
+                        shard_docs, positions=True)
     if not words:
         return ix.spark.createDataFrame([], "doc_id long, score double")
-    B, K1 = w._b_for(fs), w.K1
-    avgdl = ix.avg_field_length(fieldname)
-    n = ix.doc_count
-    uniq_terms = list(dict.fromkeys(words))
-    stats = ix.terms.where(
-        (F.col("field") == fieldname) & F.col("term").isin(uniq_terms)
-    ).select("term", "df")
-    blocks = (
-        ix.blocks  # positions kept: the kernel decodes them lazily per block
-        .where((F.col("field") == fieldname) & F.col("term").isin(uniq_terms))
-        .join(F.broadcast(stats), "term")
-    )
-    if shard_docs == "auto":
-        par = max(ix.spark.sparkContext.defaultParallelism, 1)
-        shard_docs = max(-(-n // (4 * par)), 65536) if n > 65536 else None
-    group_cols = ["segment_id"]
-    if shard_docs:
-        blocks = blocks.withColumn(
-            "_shard",
-            F.explode(F.sequence(F.floor(F.col("min_doc") / shard_docs),
-                                 F.floor(F.col("max_doc") / shard_docs))),
-        )
-        group_cols.append("_shard")
-    deleted = getattr(ix, "deleted", None)
-    if deleted is not None:
-        rng = ix.seg_ranges()
-        marks = deleted.join(
-            F.broadcast(rng),
-            (F.col("doc_id") >= F.col("doc_lo")) & (F.col("doc_id") < F.col("doc_hi")),
-        ).select("segment_id", F.col("doc_id").alias("_del_doc"))
-        if shard_docs:
-            marks = marks.withColumn(
-                "_shard", F.floor(F.col("_del_doc") / shard_docs).cast("long"))
-        data = blocks.withColumn("_del_doc", F.lit(None).cast("long")).unionByName(
-            marks, allowMissingColumns=True)
-    else:
-        data = blocks
-    fn = make_segment_phrase_wand(words, n, avgdl, B, K1, k, int(slop), prune,
-                                  shard_docs=shard_docs,
+    fn = make_segment_phrase_wand(words, inp.n, inp.avgdl, inp.B, inp.K1, k,
+                                  int(slop), prune, shard_docs=inp.shard_docs,
                                   verify_chunk=verify_chunk)
-    local = data.groupBy(*group_cols).applyInPandas(fn, "doc_id long, score double")
+    local = inp.data.groupBy(*inp.group_cols).applyInPandas(fn, "doc_id long, score double")
     return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
@@ -754,99 +693,30 @@ def wand_topk_many(
     one scan pruned to the UNION of all query terms, one shuffle, one
     kernel wave, one collect.
 
-    Plan shape: blocks scan pruned to all queries' terms -> broadcast-join
-    per-term df (stats) and the (term -> query_id) map, which REPLICATES a
-    shared term's block rows per query (queries are independent top-k
-    problems; sharing the scan, not the kernel) -> groupBy (query_id,
-    segment_id[, doc-range shard]) -> the SAME single-query kernel per
-    group (make_segment_wand, bit-identical scores by construction) ->
-    per-query window top-k. Delete markers replicate per query so every
-    group masks the same delete set. Per-query results are EXACTLY
-    wand_topk's (pinned in tests/test_segments.py)."""
+    Plan shape: the batch path's kernel input (module docstring: a shared
+    term's rows and the delete markers replicate per query; queries are
+    independent top-k problems sharing the scan, not the kernel) ->
+    the SAME single-query kernel per (query_id, segment_id[, shard]) group
+    (make_segment_wand, bit-identical scores by construction) -> per-query
+    window top-k. Per-query results are EXACTLY wand_topk's (pinned in
+    tests/test_segments.py)."""
     if not queries:
         return ix.spark.createDataFrame(
             [], "query_id long, doc_id long, score double")
-    w = weighting or BM25F()
-    if getattr(w, "use_final", False):
-        raise ValueError(
-            "final()-hook models are excluded from block-max pruning — "
-            "use Searcher.search instead")
-    fs = ix.schema[fieldname]
-    if not fs.scorable:
-        raise ValueError(
-            f"block-max WAND needs a scorable field; {fieldname!r} is not")
-    B, K1 = w._b_for(fs), w.K1
-    avgdl = ix.avg_field_length(fieldname)
-    n = ix.doc_count
     queries = {int(q): list(dict.fromkeys(ts)) for q, ts in queries.items()}
     # ``mode`` may be per-query (dict) — Searcher.search_many batches a
     # heterogeneous set (Or/And/DisMax) through one call
     modes = (
-        {int(q): mode.get(int(q), "or") for q in queries}
+        {q: mode.get(q, "or") for q in queries}
         if isinstance(mode, dict)
         else {q: mode for q in queries}
     )
     all_terms = sorted({t for ts in queries.values() for t in ts})
-    stats = ix.terms.where(
-        (F.col("field") == fieldname) & F.col("term").isin(all_terms)
-    ).select("term", "df")
-    from whoosh_spark.util import inline_rows
-
-    qmap = inline_rows(
-        ix.spark,
-        [(t, q) for q, ts in queries.items() for t in ts],
-        "term string, _qid long",
-    )
-    blocks = (
-        ix.blocks.drop("pos_counts", "pos_vals")
-        .where((F.col("field") == fieldname) & F.col("term").isin(all_terms))
-        .join(F.broadcast(stats), "term")
-        .join(F.broadcast(qmap), "term")
-    )
-    if doc_range is not None:
-        # whole-set doc-subset evaluation (same semantics as wand_topk's
-        # doc_range: pre-scan block prune + in-kernel filter, global stats)
-        lo, hi = doc_range
-        if lo >= hi:
-            raise ValueError(f"empty doc_range {doc_range}")
-        blocks = blocks.where((F.col("max_doc") >= lo) & (F.col("min_doc") < hi))
-    if shard_docs == "auto":
-        par = max(ix.spark.sparkContext.defaultParallelism, 1)
-        shard_docs = max(-(-n // (4 * par)), 65536) if n > 65536 else None
-    group_cols = ["_qid", "segment_id"]
-    if shard_docs:
-        blocks = blocks.withColumn(
-            "_shard",
-            F.explode(F.sequence(F.floor(F.col("min_doc") / shard_docs),
-                                 F.floor(F.col("max_doc") / shard_docs))),
-        )
-        group_cols.append("_shard")
-    deleted = getattr(ix, "deleted", None)
-    if deleted is not None:
-        rng = ix.seg_ranges()
-        marks = (
-            deleted.join(
-                F.broadcast(rng),
-                (F.col("doc_id") >= F.col("doc_lo"))
-                & (F.col("doc_id") < F.col("doc_hi")),
-            )
-            .select("segment_id", F.col("doc_id").alias("_del_doc"))
-            # every query's groups mask the same delete set
-            .withColumn("_qid", F.explode(F.array(
-                *[F.lit(q).cast("long") for q in queries])))
-        )
-        if shard_docs:
-            marks = marks.withColumn(
-                "_shard", F.floor(F.col("_del_doc") / shard_docs).cast("long"))
-        data = blocks.withColumn(
-            "_del_doc", F.lit(None).cast("long")
-        ).unionByName(marks, allowMissingColumns=True)
-    else:
-        data = blocks
-
+    inp = _kernel_input(ix, fieldname, weighting, all_terms, shard_docs,
+                        doc_range, queries=queries)
     kernels = {
-        q: make_segment_wand(ts, n, avgdl, B, K1, k, modes[q], prune,
-                             seed_blocks, shard_docs=shard_docs,
+        q: make_segment_wand(ts, inp.n, inp.avgdl, inp.B, inp.K1, k, modes[q],
+                             prune, seed_blocks, shard_docs=inp.shard_docs,
                              doc_range=doc_range)
         for q, ts in queries.items()
     }
@@ -857,7 +727,7 @@ def wand_topk_many(
         out.insert(0, "query_id", np.int64(qid))
         return out
 
-    local = data.groupBy(*group_cols).applyInPandas(
+    local = inp.data.groupBy(*inp.group_cols).applyInPandas(
         run, "query_id long, doc_id long, score double")
     from pyspark.sql import Window
 

@@ -43,6 +43,8 @@ from whoosh_spark.indexing.segments import (
     BLOCK_SIZE,
     BUILD_DOC_CHUNK,
     STREAM_BASE,
+    _commit_json,
+    _commit_manifest,
     _finalize,
     _manifest_dir,
     _read_manifest,
@@ -161,10 +163,7 @@ class IncrementalIndexer:
             },
             "status": "committed",
         }
-        tmp = os.path.join(_manifest_dir(self.path), f"seg_{seg_id}.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, os.path.join(_manifest_dir(self.path), f"seg_{seg_id}.json"))
+        _commit_manifest(self.path, manifest)
         done = _read_manifest(self.path)
         doc_count = sum(m["n_docs"] for m in done.values())
         _finalize(self.spark, self.path, doc_count, sorted(done))
@@ -178,9 +177,8 @@ class IncrementalIndexer:
 
 
 def _finalize_empty(path: str) -> None:
-    meta = {"doc_count": 0, "active_segments": [], "block_size": BLOCK_SIZE}
-    with open(os.path.join(path, "_meta.json"), "w") as f:
-        json.dump(meta, f)
+    _commit_json(os.path.join(path, "_meta.json"),
+                 {"doc_count": 0, "active_segments": [], "block_size": BLOCK_SIZE})
 
 
 def index_stream(
