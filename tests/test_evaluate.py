@@ -97,6 +97,20 @@ def test_eval_summary_macro_mean_counts_runless_queries(spark):
     assert s.p_at_k == round((1 / 10 + 0.0) / 2, 4)
 
 
+def test_eval_summary_ignores_run_only_queries(spark):
+    # trec_eval evaluates the topics it has judgments for: a query that
+    # appears only in the run (no qrels rows) must not count as a zero
+    run, qrels = _frames(
+        spark,
+        [("q_perfect", 5, 9.0), ("q_unjudged", 7, 4.0)],
+        [("q_perfect", 5, 2), ("q_ghost", 50, 3)],
+    )
+    s = eval_summary(run, qrels, k=10).collect()[0]
+    assert s.n_queries == 2
+    assert s.mrr == 0.5 and s.ndcg == 0.5
+    assert s.p_at_k == round((1 / 10 + 0.0) / 2, 4)
+
+
 def test_eval_run_partitioning_invariance(spark):
     import random
     rnd = random.Random(7)

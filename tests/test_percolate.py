@@ -162,31 +162,33 @@ def test_percolate_indexed_zero_df_terms(spark):
     assert got == {"or_alive"}  # AND with an absent term can never match
 
 
+def _rows(df):
+    return {(r.query_name, r.doc_id): r.score for r in df.collect()}
+
+
 def test_percolate_indexed_validation(spark):
-    import pytest
     from whoosh_spark.streaming import percolate_indexed
 
     docs = _corpus(spark, 10)
-    for bad in (
-        # phrases (incl. b-sides and duplicate words), Or(scale=),
-        # TWO-level trees, and (since r5) arbitrary-depth boolean trees
-        # with inner boost/minmatch/scale are all supported; what still
-        # rejects is foreign fields, Not/Otherwise, and phrase sides
-        # mixed with deep boolean sides
+    for rules in (
+        # shapes the kernel cannot compile — foreign fields, Not, and
+        # phrase sides mixed with deep boolean sides — take plan branches
+        # inside percolate_indexed: the same rows as percolate()
         {"wrongfield": Q.Term("lang", "en")},
         {"wrongfield_deep": Q.And([
-            Q.Or([Q.Term("text", "a"), Q.Term("lang", "en")], boost=2.0),
-            Q.Term("text", "c")])},
-        {"not_inner": Q.Or([Q.Term("text", "a"),
-                            Q.Not(Q.Term("text", "b"))])},
+            Q.Or([Q.Term("text", "spark"), Q.Term("lang", "en")], boost=2.0),
+            Q.Term("text", "join")])},
+        {"not_inner": Q.Or([Q.Term("text", "spark"),
+                            Q.Not(Q.Term("text", "join"))])},
         {"phrase_deep_mix": Q.AndNot(
-            Q.Phrase("text", ["a", "b"]),
+            Q.Phrase("text", ["join", "hash"]),
             Q.And([Q.Or([Q.Term("text", "c"), Q.Term("text", "d")],
                         boost=2.0),
                    Q.Term("text", "e")]))},
     ):
-        with pytest.raises(ValueError):
-            percolate_indexed(spark, docs, bad, schema=_SCHEMA)
+        want = _rows(percolate(spark, docs, rules, schema=_SCHEMA))
+        assert _rows(percolate_indexed(spark, docs, rules, schema=_SCHEMA)) == want
+        assert want, f"{rules} matched nothing"
     assert percolate_indexed(spark, docs, {}, schema=_SCHEMA).count() == 0
     # duplicate children dedupe in normalize() BEFORE the flattener, so
     # Or([spark, spark]) runs as a plain Term rule
@@ -360,9 +362,9 @@ def test_percolate_indexed_phrase_b_side_and_dup_words(spark):
 
 
 def test_percolate_stream_indexed_tier(spark, tmp_path):
-    """indexed=True streams each micro-batch through the large-rule-set
-    kernel: results == the batch indexed tier == the plan-branch tier,
-    and the per-batch index cache is released after each batch."""
+    """Each micro-batch runs the large-rule-set kernel: results == the
+    batch indexed tier == the plan-branch tier, and the per-batch index
+    cache is released after each batch."""
     from whoosh_spark.streaming import percolate_indexed, percolate_stream
 
     docs = _corpus(spark, 60)
@@ -375,8 +377,7 @@ def test_percolate_stream_indexed_tier(spark, tmp_path):
     }
     stream = (spark.readStream.schema(spark.read.parquet(src).schema)
               .option("maxFilesPerTrigger", 1).parquet(src))
-    q = percolate_stream(stream, rules, out, ckpt, schema=_SCHEMA,
-                         indexed=True)
+    q = percolate_stream(stream, rules, out, ckpt, schema=_SCHEMA)
     q.processAllAvailable()
     q.stop()
     got = {(r.query_name, r.doc_id)
@@ -391,22 +392,33 @@ def test_percolate_stream_indexed_tier(spark, tmp_path):
     assert got == whole and len(got) > 20
 
 
-def test_percolate_stream_indexed_validates_rules_eagerly(spark, tmp_path):
-    """Unsupported rule shapes must fail at start() time, not as a
-    mid-run StreamingQueryException from the first micro-batch."""
+def test_percolate_stream_not_rule_matches_batch(spark, tmp_path):
+    """A Not rule (a plan branch inside each micro-batch) streams beside a
+    kernel rule and matches percolate(); a final()-hook weighting still
+    fails at start() time, not as a mid-run StreamingQueryException."""
+    from whoosh_spark.search.scoring import BM25F, FinalWeighting
     from whoosh_spark.streaming import percolate_stream
 
-    src = str(tmp_path / "in")
-    _corpus(spark, 5).write.parquet(src)
+    src, out = str(tmp_path / "in"), str(tmp_path / "out")
+    docs = _corpus(spark, 30)
+    docs.write.parquet(src)
+    rules = {"not_rule": Q.Or([Q.Term("text", "spark"),
+                               Q.Not(Q.Term("text", "join"))]),
+             "t": Q.Term("text", "hash")}
     stream = (spark.readStream.schema(spark.read.parquet(src).schema)
               .parquet(src))
-    with pytest.raises(ValueError, match="use percolate"):
-        percolate_stream(
-            stream,
-            {"not_rule": Q.Or([Q.Term("text", "a"),
-                               Q.Not(Q.Term("text", "b"))])},
-            str(tmp_path / "out"), str(tmp_path / "ck"),
-            schema=_SCHEMA, indexed=True)
+    with pytest.raises(ValueError, match="final"):
+        percolate_stream(stream, rules, out, str(tmp_path / "ck0"),
+                         schema=_SCHEMA,
+                         weighting=FinalWeighting(BM25F(), lambda s: s))
+    q = percolate_stream(stream, rules, out, str(tmp_path / "ck"),
+                         schema=_SCHEMA, with_scores=False)
+    q.awaitTermination(120)
+    got = spark.read.parquet(out)
+    assert got.columns == ["query_name", "doc_id", "_batch_id"]
+    want = set(_rows(percolate(spark, docs, rules, schema=_SCHEMA)))
+    assert {(r.query_name, r.doc_id) for r in got.collect()} == want
+    assert {n for n, _ in want} == {"not_rule", "t"}
 
 
 def test_percolate_indexed_or_scale_parity(spark):
@@ -575,8 +587,8 @@ def test_percolate_indexed_deep_tree_parity(spark):
 
 def test_percolate_indexed_deep_zero_df_and_boundaries(spark):
     # a zero-df leaf inside a deep AND kills only that branch; inside a
-    # deep OR the other branch still fires; phrase-mixed-with-deep still
-    # raises (the honest remaining boundary)
+    # deep OR the other branch still fires; phrase-mixed-with-deep and
+    # an inner Not take plan branches with the same rows as percolate()
     from whoosh_spark.streaming import percolate, percolate_indexed
 
     def T(t, **kw):
@@ -597,21 +609,68 @@ def test_percolate_indexed_deep_zero_df_and_boundaries(spark):
     assert any(q == "dead_and_branch" for q, _ in b)
     assert not any(q == "all_dead" for q, _ in b)
 
-    with pytest.raises(ValueError, match="percolate"):
-        # phrase a-side with a deep boolean b-side exceeds both tiers
-        percolate_indexed(
-            spark, docs,
-            {"mix": Q.AndNot(
-                Q.Phrase("text", ["hash", "join"]),
-                Q.And([Q.Or([T("spark"), T("merge")], boost=2.0),
-                       T("scan")]))},
-            schema=_SCHEMA)
-    with pytest.raises(ValueError, match="percolate"):
+    beyond = {
+        # phrase a-side with a deep boolean b-side
+        "mix": Q.AndNot(
+            Q.Phrase("text", ["join", "hash"]),
+            Q.And([Q.Or([T("spark"), T("merge")], boost=2.0), T("scan")])),
         # Not is not per-doc-local over present leaves
-        percolate_indexed(
-            spark, docs,
-            {"n": Q.And([T("spark"), Q.Or([T("x"), Q.Not(T("join"))])])},
-            schema=_SCHEMA)
+        "n": Q.And([T("spark"), Q.Or([T("x"), Q.Not(T("join"))])]),
+    }
+    want = _rows(percolate(spark, docs, beyond, schema=_SCHEMA))
+    assert _rows(percolate_indexed(spark, docs, beyond, schema=_SCHEMA)) == want
+    assert {q for q, _ in want} == {"mix", "n"}
+
+
+def test_percolate_indexed_routes_each_rule_by_shape(spark):
+    """One rule dict mixing kernel rules with rules only plan branches
+    compile (range, prefix, inner Not, foreign field, a phrase a-side
+    with a deep b-side): the union is bit-identical to percolate(), also
+    on a batch where no kernel term occurs but plan-branch rules match."""
+    from whoosh_spark.search.scoring import BM25F, FinalWeighting
+    from whoosh_spark.streaming import percolate_indexed
+    from whoosh_spark.streaming.percolate import _kernel_rule, _NotKernel
+
+    def T(t, **kw):
+        return Q.Term("text", t, **kw)
+
+    def b_side(boost):
+        return Q.And([Q.Or([T("scan"), T("filter")], boost=boost), T("batch")])
+
+    join_hash = Q.Phrase("text", ["join", "hash"])
+    rules = {
+        "flat": Q.And([T("spark"), T("join")]),
+        "phrase": join_hash,
+        "phrase_two_level_b": Q.AndNot(join_hash, b_side(1.0)),
+        "deep": Q.Or([Q.And([T("merge"), T("window")], boost=2.0), T("table")]),
+        "range": Q.NumericRange("n_chars", 15, 25),
+        "prefix": Q.Prefix("text", "str"),
+        "inner_not": Q.And([T("spark"), Q.Or([T("hash"), Q.Not(T("join"))])]),
+        "foreign": Q.Term("lang", "en"),
+        "phrase_deep_b": Q.AndNot(join_hash, b_side(2.0)),
+    }
+    branches = set()
+    for name, q in rules.items():
+        try:
+            _kernel_rule(q.normalize(), "text")
+        except _NotKernel:
+            branches.add(name)
+    assert branches == {"range", "prefix", "inner_not", "foreign",
+                        "phrase_deep_b"}
+
+    want = _rows(percolate(spark, _corpus(spark), rules, schema=_SCHEMA))
+    assert _rows(percolate_indexed(spark, _corpus(spark), rules,
+                                   schema=_SCHEMA)) == want
+    assert {q for q, _ in want} == set(rules)
+    # no kernel term occurs in this batch (n_chars 14 and 19)
+    quiet = _docs(spark, [(500, "zebra crossing"), (501, "strange quiet words")])
+    want = _rows(percolate(spark, quiet, rules, schema=_SCHEMA))
+    assert _rows(percolate_indexed(spark, quiet, rules, schema=_SCHEMA)) == want
+    assert set(want) == {("range", 501), ("prefix", 501), ("foreign", 500),
+                         ("foreign", 501)}
+    with pytest.raises(ValueError, match="final"):
+        percolate_indexed(spark, quiet, rules, schema=_SCHEMA,
+                          weighting=FinalWeighting(BM25F(), lambda s: s))
 
 
 def test_percolate_indexed_deep_tree_fuzz(spark):

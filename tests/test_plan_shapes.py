@@ -599,3 +599,61 @@ def test_rocchio_expand_broadcast_queries_no_python(spark):
     p = _plan(rocchio_topk(emb, emb.where("vec_id < 2"), k=5, feedback=3))
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
     assert "BroadcastExchange" in p
+
+
+def _percolate_plans(spark, branch_rules):
+    from whoosh_spark.fields import ID, NUMERIC, Schema, TEXT
+    from whoosh_spark.streaming import percolate_indexed
+
+    words = ["spark", "join", "hash", "merge", "window", "scan"]
+    docs = spark.createDataFrame(
+        [(i, " ".join(words[(i + k) % 6] for k in range(1 + i % 4)), "en", 20)
+         for i in range(40)],
+        "doc_id long, text string, lang string, n_chars long")
+    rules = {
+        "a": Q.And([Q.Term("text", "spark"), Q.Term("text", "join")]),
+        "o": Q.Or([Q.Term("text", "hash"), Q.Term("text", "merge")]),
+        "t": Q.Term("text", "window"),
+        **branch_rules,
+    }
+    schema = Schema(TEXT("text"), ID("lang"), NUMERIC("n_chars"))
+    return _plan(percolate_indexed(spark, docs, rules, schema))
+
+
+def _union_children(p: str) -> list[str]:
+    lines = p.splitlines()
+    i = next(k for k, ln in enumerate(lines)
+             if ln.lstrip(" :+-").startswith("Union"))
+    col = lines[i].index("Union")
+    kids: list[list[str]] = []
+    for ln in lines[i + 1:]:
+        if ln[col:col + 3] in (":- ", "+- "):
+            kids.append([])
+        kids[-1].append(ln)
+    return ["\n".join(k) for k in kids]
+
+
+def test_percolate_flat_rules_one_rule_broadcast_no_program(spark):
+    """Flat rules ride ONE broadcast of rule rows onto the postings scan;
+    the deep-program columns stay out of the plan."""
+    p = _percolate_plans(spark, {})
+    assert len(re.findall(r"BroadcastHashJoin", p)) == 1
+    assert re.search(r"Scan ExistingRDD\[query_name#\d+,term#\d+,_q#\d+", p)
+    assert "_prog" not in p and "Union" not in p
+
+
+def test_percolate_plan_branch_rules_read_the_cached_postings(spark):
+    """Rules the kernel cannot compile (a prefix, an inner Not) are union
+    branches beside the kernel, and every branch reads the batch's cached
+    postings: the analyzer runs only under the cache, so the batch is
+    analyzed once."""
+    p = _percolate_plans(spark, {
+        "p": Q.Prefix("text", "sp"),
+        "n": Q.And([Q.Term("text", "spark"),
+                    Q.Or([Q.Term("text", "hash"),
+                          Q.Not(Q.Term("text", "join"))])]),
+    })
+    kids = _union_children(p)
+    assert len(kids) == 3 and "BroadcastHashJoin" in kids[0]
+    assert all("InMemoryTableScan" in k for k in kids)
+    assert p.count("MapInArrow") == p.count("InMemoryRelation") >= 3

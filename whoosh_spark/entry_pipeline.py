@@ -5890,7 +5890,8 @@ FROM perq p FULL JOIN ideal i USING (query_id)""",
 final AS (
   SELECT query_id, coalesce(p.nrel_k, 0) AS nrel_k, p.first,
          coalesce(p.dcg, 0.0) AS dcg, i.idcg
-  FROM perq p FULL JOIN ideal i USING (query_id))
+  FROM perq p FULL JOIN ideal i USING (query_id)
+  WHERE query_id IN (SELECT query_id FROM qr))
 SELECT count(*)::BIGINT AS n_queries,
        round(avg(round(nrel_k / 10.0, 4)), 4) AS p_at_k,
        round(avg(round(coalesce(1.0 / first, 0.0), 4)), 4) AS mrr,
@@ -5900,8 +5901,9 @@ FROM final"""
 
     def _eval_summary_entry(spark, sf):
         # macro mean over the same three-query run (eval_summary —
-        # trec_eval's summary convention: unweighted mean over queries,
-        # run-less qrels queries zero-filled into the denominator);
+        # trec_eval's summary convention: unweighted mean over the
+        # queries with qrels, run-less qrels queries zero-filled into the
+        # denominator, qrels-less run queries left out);
         # run/qrels come from the SAME _eval_frames as the per-query
         # entry, so the two can never drift apart
         from whoosh_spark.search.evaluate import eval_summary

@@ -126,13 +126,16 @@ def eval_summary(
     round_to: int = 4,
 ) -> DataFrame:
     """Macro mean over :func:`eval_run`'s per-query rows -> ONE row
-    (n_queries, p_at_k, mrr, ndcg). Unweighted mean over queries (the
-    trec_eval summary convention); qrels-only queries count as zeros in
-    the denominator because :func:`eval_run` emits them zero-filled.
+    (n_queries, p_at_k, mrr, ndcg). Unweighted mean over the queries
+    that have qrels (the trec_eval summary convention): qrels-only
+    queries count as zeros in the denominator because :func:`eval_run`
+    emits them zero-filled; run-only queries (no qrels rows) are left
+    out, as trec_eval ignores topics it has no judgments for.
 
     Scale shape: one global aggregate over a queries-sized frame (runs
     are top-k shortlists, so the input is already tiny)."""
-    per_q = eval_run(run, qrels, k=k, round_to=round_to)
+    per_q = eval_run(run, qrels, k=k, round_to=round_to).join(
+        qrels.select("query_id"), "query_id", "left_semi")
     return per_q.agg(
         F.count("*").cast("long").alias("n_queries"),
         F.round(F.avg("p_at_k"), round_to).alias("p_at_k"),

@@ -4,28 +4,38 @@ of my saved searches does this new document satisfy?"). Whoosh has no
 percolator; this is part of the streaming extension over the same engine
 (the shape popularized by Elasticsearch's percolate API).
 
-Batch kernel: analyze + index the incoming batch ONCE through the same
-verified build path as the main engine (``build_index`` — mapInArrow
-analyzer, postings + stats frames), then compile every standing query
-against that per-batch index and union the tagged match sets into ONE
-Spark action. Each compiled query is a column-expression plan over the
-SHARED postings frame, so the scan is multiplexed across queries by
-Catalyst instead of re-run per query. Per-micro-batch cost scales with
-batch size; the rule set is the bounded side (tens to thousands of
-standing queries — broadcast-sized by nature). For LARGE rule sets
-(thousands+), ``percolate_indexed`` is the classical term->query
-inverted index over the RULES: the rule set becomes broadcast DATA
-joined onto one scored postings scan, so plan size is O(1) in the rule
-count — bit-identical to ``percolate`` for flat Term/And/Or rules.
+Both batch calls analyze + index the incoming batch ONCE through the
+same verified build path as the main engine (``build_index`` —
+mapInArrow analyzer, postings + stats frames), persist that per-batch
+index, and score with its batch-local BM25 stats (a percolation batch IS
+the corpus for alerting purposes).
 
-Streaming twin: ``percolate_stream`` runs the identical batch kernel
-per micro-batch via ``foreachBatch`` and appends matches to a parquet
-sink; streaming == batch is pinned in tests/test_percolate.py via an
-availableNow run over the same rows.
+- ``percolate`` compiles every rule to its own plan branch
+  (``Searcher.compile``) over the shared postings and unions the tagged
+  match sets into ONE Spark action: the full query surface, one branch
+  per rule. It is the reference the kernel below is tested against.
+- ``percolate_indexed`` takes the same rules and routes each one by its
+  shape. **Kernel rules** ride as broadcast DATA joined onto one scored
+  postings scan, so the plan is O(1) in the rule count: flat Term/And/Or
+  rows, Phrase chains, two-level And-of-Ors / Or-of-Ands, AndNot/Require
+  whose b is one of those, and arbitrary-depth And / Or / DisjunctionMax
+  / AndMaybe / AndNot / Require trees of Terms (stack-machine programs).
+  **Every other rule** takes a ``percolate`` plan branch over the same
+  index and weighting: a leaf on a field other than ``fieldname``,
+  Not / Otherwise, range / prefix / wildcard / fuzzy leaves, a Phrase
+  side mixed with a deep boolean side, or a rule beyond the kernel's
+  24/12/12-bit (slot, group, group-req) pack. The two outputs are
+  unioned, and both are bit-identical to ``percolate``.
+
+Streaming twin: ``percolate_stream`` runs ``percolate_indexed`` per
+micro-batch via ``foreachBatch``, appends matches to a parquet sink and
+releases the batch's index; streaming == batch is pinned in
+tests/test_percolate.py via an availableNow run over the same rows.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass, field
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,8 +45,13 @@ from whoosh_spark import query as Q
 from whoosh_spark.fields import Schema, documents_schema
 from whoosh_spark.indexing import build_index
 from whoosh_spark.search import Searcher
+from whoosh_spark.search.scoring import BM25F
 
 __all__ = ["percolate", "percolate_indexed", "percolate_stream"]
+
+
+def _empty(spark: SparkSession) -> DataFrame:
+    return spark.createDataFrame([], "query_name string, doc_id long, score double")
 
 
 def percolate(
@@ -55,28 +70,32 @@ def percolate(
     batch IS the corpus for alerting purposes); pass
     ``with_scores=False`` for pure membership.
     """
-    df, _ix = _percolate_with_ix(spark, docs, queries, schema, with_scores)
-    return df
-
-
-def _percolate_with_ix(spark, docs, queries, schema, with_scores):
     if not queries:
-        return (
-            spark.createDataFrame([], "query_name string, doc_id long, score double"),
-            None,
-        )
+        return _empty(spark)
     # persist the analyzed frames for the duration of the multi-query
     # union — every branch shares the same postings scan
     ix = build_index(spark, docs, schema or documents_schema()).persist()
-    s = Searcher(ix)
+    return _plan_branches(ix, queries, with_scores)
+
+
+def _plan_branches(ix, queries, with_scores=True, weighting=None) -> DataFrame:
+    """One ``Searcher.compile`` branch per rule over ``ix``, unioned."""
+    s = Searcher(ix, weighting)
     branches = []
     for name, q in queries.items():
-        scored = s.compile(q)
         cols = [F.lit(name).alias("query_name"), "doc_id"]
         if with_scores:
             cols.append(F.col("score"))
-        branches.append(scored.select(*cols))
-    return reduce(DataFrame.unionByName, branches), ix
+        branches.append(s.compile(q).select(*cols))
+    return reduce(DataFrame.unionByName, branches)
+
+
+def _kernel_weighting(weighting):
+    w = weighting or BM25F()
+    if getattr(w, "use_final", False):
+        raise ValueError("final()-hook weightings are per-result-set; "
+                         "use percolate()")
+    return w
 
 
 def percolate_stream(
@@ -87,48 +106,26 @@ def percolate_stream(
     schema: Schema | None = None,
     with_scores: bool = True,
     available_now: bool = True,
-    indexed: bool = False,
     fieldname: str = "text",
     weighting=None,
 ):
-    """Percolate a document STREAM: each micro-batch runs the same batch
-    kernel and appends (query_name, doc_id[, score], _batch_id) parquet
-    rows to ``out_path``. Returns the started StreamingQuery (caller
-    awaits / stops). State is per-batch only — percolation is stateless
-    across batches by definition, so no watermark is needed and a
-    restart resumes cleanly from the checkpoint's source offsets.
-
-    ``indexed=True`` routes each micro-batch through
-    :func:`percolate_indexed` instead — the large-rule-set tier (rules
-    as broadcast data, O(1) plan size): the right choice when thousands
-    of standing queries watch the stream. Rule-shape limits of that tier
-    apply (boolean trees of any depth incl. inner boost/minmatch/scale,
-    Phrase, AndNot/Require with flat, Phrase, or two-level b; phrase
-    sides cannot mix with deep boolean sides);
-    ``with_scores=False`` is plan-branch-only (the indexed tier always
-    scores; callers can drop the column downstream).
+    """Percolate a document STREAM: each micro-batch runs
+    :func:`percolate_indexed` and appends (query_name, doc_id[, score],
+    _batch_id) parquet rows to ``out_path``. Returns the started
+    StreamingQuery (caller awaits / stops). State is per-batch only —
+    percolation is stateless across batches by definition, so no
+    watermark is needed and a restart resumes cleanly from the
+    checkpoint's source offsets.
     """
-    if indexed and not with_scores:
-        raise ValueError("indexed=True always scores; drop the column "
-                         "downstream or use the plan-branch tier")
-    if indexed:
-        # validate rule SHAPES eagerly, at start() time — the full rule
-        # dict is known now, so an unsupported tree must not surface
-        # later as a mid-run StreamingQueryException from the first
-        # micro-batch
-        for name, q in queries.items():
-            _flat_rule_full(name, q.normalize(), fieldname)
+    # a final()-hook weighting fails here, at start() time, not as a
+    # mid-run StreamingQueryException from the first micro-batch
+    w = _kernel_weighting(weighting)
 
     def _one_batch(bdf: DataFrame, batch_id: int) -> None:
-        if indexed:
-            out, ix = _percolate_indexed_with_ix(
-                bdf.sparkSession, bdf, queries, schema,
-                fieldname=fieldname, weighting=weighting,
-            )
-        else:
-            out, ix = _percolate_with_ix(
-                bdf.sparkSession, bdf, queries, schema, with_scores
-            )
+        out, ix = _percolate_indexed_with_ix(
+            bdf.sparkSession, bdf, queries, schema, fieldname, w)
+        if not with_scores:
+            out = out.drop("score")
         try:
             (out.withColumn("_batch_id", F.lit(batch_id))
                 .write.mode("append").parquet(out_path))
@@ -145,23 +142,105 @@ def percolate_stream(
     return writer.start()
 
 
-def _flat_rule(name: str, q: Q.Query, fieldname: str):
-    """Flatten one standing rule into (rows, n_required, rule_boost,
-    slop, scale_pair) where rows = [(term, pos_in_query, leaf_boost,
-    group, group_req)], ``slop`` is None for boolean rules or the phrase
-    slop for Phrase rules, and ``scale_pair`` is (scale, n_children) for
-    Or(scale=) coord weighting (None otherwise). Shapes beyond this
-    tier no longer bounce to ``percolate()``: ``_flat_rule_full`` falls
-    back to the deep-tree program path (``_deep_rule``) — the raises
-    below are the FAST-PATH boundary, not the feature boundary.
+class _NotKernel(Exception):
+    """A rule shape the kernel cannot compile: the rule takes a plan
+    branch (``_flat_rule`` raising it falls back to ``_deep_rule`` first)."""
+
+
+@dataclass
+class _Rule:
+    """One standing rule compiled for the kernel. Every row list holds
+    (term, slot, leaf_boost, group, group_req) rows: ``pos`` rows score
+    (role 0); ``neg`` (AndNot.b, role 1) and ``req`` (Require.b, role 2)
+    rows are pure match sets with leaf_boost 0.0. A side matches when
+    >= its ``*required`` groups are satisfied; a ``*slop`` marks a Phrase
+    side; ``scale``/``n_children`` are the a-side's Or(scale=) coord. A
+    deep rule carries its whole tree, b-sides included, in ``prog`` (every
+    leaf a role-0 row, n_required 0, boost 1.0 — the program carries all
+    boosts) and its prune bound in ``minl``."""
+    pos: list
+    n_required: int = 0
+    rboost: float = 1.0
+    slop: int | None = None
+    scale: float | None = None
+    n_children: float | None = None
+    neg: list = field(default_factory=list)
+    neg_required: int | None = None
+    neg_slop: int | None = None
+    req: list = field(default_factory=list)
+    req_required: int | None = None
+    req_slop: int | None = None
+    prog: list | None = None
+    minl: int = 0
+
+    # flat-rule fast path: when every group of a side is a singleton with
+    # req 1 (all flat Term/And/Or and Phrase sides), satisfied-group count
+    # == plain row count and the grouped total == the plain ordered fold —
+    # the kernel then skips the struct-accumulator group scan entirely, so
+    # the 100k-flat-rule hot case pays exactly the pre-grouping cost. Deep
+    # rules mark aflat too: their score/match comes from the program, so
+    # the group scan must not run for them either.
+    @property
+    def aflat(self) -> bool:
+        return self.deep or _singletons(self.pos)
+
+    @property
+    def nflat(self) -> bool:
+        return _singletons(self.neg)
+
+    @property
+    def rflat(self) -> bool:
+        return _singletons(self.req)
+
+    @property
+    def deep(self) -> bool:
+        return self.prog is not None
+
+
+def _singletons(rows) -> bool:
+    return (all(r[4] == 1 for r in rows)
+            and len({r[3] for r in rows}) == len(rows))
+
+
+# The per-rule broadcast columns in broadcast order: (_Rule attribute,
+# Spark type, name after the per-(rule, doc) aggregate); the broadcast
+# column is "_<attribute>". The deep columns ride only when some rule is
+# deep, so the flat-rule hot path's broadcast, agg and plan stay
+# byte-identical otherwise.
+_RULE_COLS = (
+    ("n_required", "int", "_req"),
+    ("neg_required", "int", "_negr"),
+    ("req_required", "int", "_reqr"),
+    ("rboost", "double", "_rb"),
+    ("slop", "int", "_sl"),
+    ("neg_slop", "int", "_nsl"),
+    ("req_slop", "int", "_rsl"),
+    ("scale", "double", "_sc"),
+    ("n_children", "double", "_nch"),
+    ("aflat", "boolean", "_aflat"),
+    ("nflat", "boolean", "_nflat"),
+    ("rflat", "boolean", "_rflat"),
+)
+_DEEP_COLS = (
+    ("deep", "boolean", "_deep"),
+    ("prog", "array<struct<op:int,n:int,q:bigint,boost:double,mm:int,"
+             "scale:double>>", "_prog"),
+    ("minl", "int", "_minl"),
+)
+
+
+def _flat_rule(q: Q.Query, fieldname: str) -> _Rule:
+    """Flatten one rule side into grouped-leaf rows (see ``_Rule``);
+    ``slop`` is set for Phrase rules. Shapes beyond this path raise
+    ``_NotKernel`` and ``_kernel_rule`` retries them on the deep-tree
+    program path (``_deep_rule``).
 
     Every rule reduces to ONE uniform grouped-leaf semantics: leaves are
     numbered in DFS order; each top-level child is a GROUP, satisfied
     when the (rule, doc) pair holds >= group_req of its leaves; the rule
     matches when >= n_required groups are satisfied; a leaf contributes
     score iff its group is satisfied. Flat Term/And/Or are the 1-leaf-
-    per-group special case (identical semantics and bit-identical folds
-    to before), and TWO-LEVEL trees ride the same machinery:
+    per-group special case, and TWO-LEVEL trees ride the same machinery:
 
     - And-of-(Term | Or-of-Terms)  (CNF): Or-group req = its minmatch,
       n_required = n_children — e.g. And(Or(a, b), c).
@@ -173,85 +252,71 @@ def _flat_rule(name: str, q: Q.Query, fieldname: str):
     contiguous prefix-ordered run, and x + 0.0 == x for the positive
     BM25 partials) — so nested rules stay exactly percolate()-equal.
     INNER node boost/scale would break flat-fold associativity
-    ((a+b)*2 != 2a+2b bitwise), so they raise; leaf Term boosts and the
-    OUTER boost/scale/minmatch are fully supported. Deeper trees belong
-    on the plan-branch tier (``percolate``)."""
+    ((a+b)*2 != 2a+2b bitwise), so those trees go deep; leaf Term boosts
+    and the OUTER boost/scale/minmatch are supported here."""
     def leaf(t: Q.Term, pos: int, grp: int, grp_req: int):
         if t.fieldname != fieldname:
-            raise ValueError(
-                f"rule {name!r}: field {t.fieldname!r} != {fieldname!r}")
+            raise _NotKernel(f"field {t.fieldname!r}")
         return (t.text, pos, float(t.boost), grp, grp_req)
 
     if isinstance(q, Q.Term):
-        return [leaf(q, 0, 0, 1)], 1, 1.0, None, None
+        return _Rule([leaf(q, 0, 0, 1)], 1)
     if isinstance(q, Q.Phrase):
         if q.fieldname != fieldname:
-            raise ValueError(
-                f"rule {name!r}: field {q.fieldname!r} != {fieldname!r}")
+            raise _NotKernel(f"field {q.fieldname!r}")
         # duplicate words are fine: each word SLOT is its own broadcast
         # row (distinct _q), so a duplicated term joins the same posting
         # once per slot and the positional chain still demands strictly
         # increasing positions — exactly the executor's _c_phrase joins
         rows = [(w, i, 1.0, i, 1) for i, w in enumerate(q.words)]
-        return rows, len(q.words), float(q.boost), int(q.slop), None
-    if isinstance(q, (Q.And, Q.Or)):
-        kids = q.subqueries
-        if not kids:
-            raise ValueError(f"rule {name!r}: empty {type(q).__name__}")
-        inner_cls = Q.Or if isinstance(q, Q.And) else Q.And
-        rows, texts, qi = [], [], 0
-        for gi, k in enumerate(kids):
-            if isinstance(k, Q.Term):
-                rows.append(leaf(k, qi, gi, 1))
-                texts.append(k.text)
-                qi += 1
-                continue
-            if not (isinstance(k, inner_cls)
-                    and k.subqueries
-                    and all(isinstance(g, Q.Term) for g in k.subqueries)):
-                raise ValueError(
-                    f"rule {name!r}: percolate_indexed supports flat rules "
-                    "and two-level And-of-Ors / Or-of-Ands of Terms; use "
-                    "percolate() for this tree")
-            if float(k.boost) != 1.0 or getattr(k, "scale", None):
-                raise ValueError(
-                    f"rule {name!r}: inner-node boost/scale breaks the "
-                    "flat score fold; use percolate()")
-            grp_req = (max(int(getattr(k, "minmatch", 1) or 1), 1)
-                       if isinstance(k, Q.Or) else len(k.subqueries))
-            for g in k.subqueries:
-                rows.append(leaf(g, qi, gi, grp_req))
-                texts.append(g.text)
-                qi += 1
-        if len(set(texts)) != len(texts):
-            raise ValueError(f"rule {name!r}: duplicate terms in one rule")
-        scale_pair = None
-        if isinstance(q, Q.Or):
-            # Or(scale=s): executor coord weighting — the summed score is
-            # multiplied by (1 - s) + s * matched_children / n_children
-            # (executor.py::_c_or); matched children == satisfied groups
-            if getattr(q, "scale", None):
-                scale_pair = (float(q.scale), float(len(kids)))
-            n_req = max(int(getattr(q, "minmatch", 1) or 1), 1)
-        else:
-            n_req = len(kids)
-        return rows, n_req, float(q.boost), None, scale_pair
-    raise ValueError(
-        f"rule {name!r}: {type(q).__name__} not supported by "
-        "percolate_indexed; use percolate()")
+        return _Rule(rows, len(q.words), float(q.boost), int(q.slop))
+    if not isinstance(q, (Q.And, Q.Or)):
+        raise _NotKernel(type(q).__name__)
+    kids = q.subqueries
+    if not kids:
+        raise _NotKernel(f"empty {type(q).__name__}")
+    inner_cls = Q.Or if isinstance(q, Q.And) else Q.And
+    rows, qi = [], 0
+    for gi, k in enumerate(kids):
+        if isinstance(k, Q.Term):
+            rows.append(leaf(k, qi, gi, 1))
+            qi += 1
+            continue
+        if not (isinstance(k, inner_cls)
+                and k.subqueries
+                and all(isinstance(g, Q.Term) for g in k.subqueries)):
+            raise _NotKernel("deeper than two levels")
+        if float(k.boost) != 1.0 or getattr(k, "scale", None):
+            raise _NotKernel("inner-node boost/scale")
+        grp_req = (max(int(getattr(k, "minmatch", 1) or 1), 1)
+                   if isinstance(k, Q.Or) else len(k.subqueries))
+        for g in k.subqueries:
+            rows.append(leaf(g, qi, gi, grp_req))
+            qi += 1
+    if len({r[0] for r in rows}) != len(rows):
+        raise _NotKernel("duplicate terms in one rule")
+    if isinstance(q, Q.And):
+        return _Rule(rows, len(kids), float(q.boost))
+    rule = _Rule(rows, max(int(getattr(q, "minmatch", 1) or 1), 1),
+                 float(q.boost))
+    if getattr(q, "scale", None):
+        # Or(scale=s): executor coord weighting — the summed score is
+        # multiplied by (1 - s) + s * matched_children / n_children
+        # (executor.py::_c_or); matched children == satisfied groups
+        rule.scale, rule.n_children = float(q.scale), float(len(kids))
+    return rule
 
 
 _DEEP_OPS = {Q.And: 1, Q.Or: 2, Q.DisjunctionMax: 3, Q.AndMaybe: 4,
              Q.AndNot: 5, Q.Require: 6}
 
 
-def _deep_rule(name: str, q: Q.Query, fieldname: str):
-    """Compile an ARBITRARY-DEPTH boolean rule tree into
-    (leaf_rows, program): leaf_rows = [(term, q_index, leaf_boost)] and
-    program = a post-order instruction list
-    [(op, n, q_packed, boost, mm, scale)] a stack machine evaluates per
-    (rule, doc) group inside the kernel (one F.aggregate pass over the
-    broadcast program; see ``_deep_eval``).
+def _deep_rule(q: Q.Query, fieldname: str) -> _Rule:
+    """Compile an ARBITRARY-DEPTH boolean rule tree into leaf rows
+    [(term, q_index, leaf_boost, 0, 1)] and a program: a post-order
+    instruction list [(op, n, q_packed, boost, mm, scale)] a stack
+    machine evaluates per (rule, doc) group inside the kernel (one
+    F.aggregate pass over the broadcast program; see ``deep_eval``).
 
     Node coverage — each op mirrors the executor's compile bit-for-bit
     over the group's present leaves (absent leaf == unmatched child ==
@@ -271,22 +336,20 @@ def _deep_rule(name: str, q: Q.Query, fieldname: str):
     Every node's score is then multiplied by its boost (x * 1.0 is the
     IEEE identity, so the unconditional multiply matches the executor's
     boost==1.0 skip bitwise). Inner-node boost / Or(minmatch=, scale=) /
-    DisMax(tiebreak=) are therefore fully supported at any depth — the
-    r4 limitation this path removes. Duplicate terms across the tree
-    are fine (each leaf is its own slot/map key). Not / Otherwise /
-    positional or multi-term leaves (Phrase, ranges, wildcards) are not
-    per-doc-local over present leaves and still route to
-    ``percolate()``."""
+    DisMax(tiebreak=) are therefore supported at any depth. Duplicate
+    terms across the tree are fine (each leaf is its own slot/map key).
+    Not / Otherwise / positional or multi-term leaves (Phrase, ranges,
+    wildcards) are not per-doc-local over present leaves: they raise
+    ``_NotKernel`` and the rule takes a plan branch."""
     leaves: list[tuple] = []
     prog: list[tuple] = []
 
     def walk(node: Q.Query) -> None:
         if isinstance(node, Q.Term):
             if node.fieldname != fieldname:
-                raise ValueError(
-                    f"rule {name!r}: field {node.fieldname!r} != {fieldname!r}")
+                raise _NotKernel(f"field {node.fieldname!r}")
             qi = len(leaves)
-            leaves.append((node.text, qi, float(node.boost)))
+            leaves.append((node.text, qi, float(node.boost), 0, 1))
             # q_packed mirrors the kernel's (q, grp, grp_req) pack with
             # grp=0, grp_req=1 — the map key the LEAF op looks up
             prog.append((0, 0, qi * 16777216 + 1, 1.0, 0, None))
@@ -294,7 +357,7 @@ def _deep_rule(name: str, q: Q.Query, fieldname: str):
         if isinstance(node, (Q.And, Q.Or, Q.DisjunctionMax)):
             kids = node.subqueries
             if not kids:
-                raise ValueError(f"rule {name!r}: empty {type(node).__name__}")
+                raise _NotKernel(f"empty {type(node).__name__}")
             for k in kids:
                 walk(k)
             mm, sc = 0, None
@@ -312,12 +375,10 @@ def _deep_rule(name: str, q: Q.Query, fieldname: str):
             prog.append((_DEEP_OPS[type(node)], 2, 0, float(node.boost),
                          0, None))
             return
-        raise ValueError(
-            f"rule {name!r}: {type(node).__name__} nodes are not supported "
-            "in percolate_indexed rule trees; use percolate()")
+        raise _NotKernel(type(node).__name__)
 
     walk(q)
-    return leaves, prog
+    return _Rule(leaves, prog=prog, minl=_deep_min_leaves(q))
 
 
 def _deep_min_leaves(q: Q.Query) -> int:
@@ -347,62 +408,42 @@ def _deep_min_leaves(q: Q.Query) -> int:
     raise ValueError(f"unexpected deep node {type(q).__name__}")
 
 
-def _flat_rule_full(name: str, q: Q.Query, fieldname: str):
-    """Full per-rule flattening -> (pos_rows, n_required, rule_boost,
-    slop, coord, neg_rows, neg_required, neg_slop, req_rows,
-    req_required, req_slop, prog) — ``coord`` = the a-side's Or(scale=)
-    (scale, n_children) pair or None. AndNot(a, b): a scored, doc excluded when it matches b
-    (executor's left_anti); Require(a, b): doc kept only when it matches
-    b (left_semi). b may be flat Term/And/Or OR a Phrase: AND-shaped b
-    excludes/requires only when ALL its terms hit, OR-shaped when
-    minmatch of them hit, Phrase b when all word slots hit AND the
-    positional chain survives — exactly the compiled semantics of b as a
-    match set. The a side may be a Phrase (slop carried through). b's
-    rows are (term, slot) pairs so a positional b keeps word order.
+def _grouped_rule(q: Q.Query, fieldname: str) -> _Rule:
+    """``_flat_rule``, plus AndNot(a, b) / Require(a, b) whose sides it
+    flattens: a is scored; the doc is excluded when it matches b
+    (executor's left_anti) or kept only when it does (left_semi). b keeps
+    its (group, group_req) labels, so it matches on the same
+    satisfied-group count the a-side uses: an AND-shaped b when all its
+    terms hit, an OR-shaped b when minmatch of them hit, a two-level b
+    group-aware, a Phrase b when all word slots hit AND its positional
+    chain survives — exactly the compiled semantics of b as a match set.
+    b's slots keep word order; its boosts and coord are unused."""
+    if not isinstance(q, (Q.AndNot, Q.Require)):
+        return _flat_rule(q, fieldname)
+    rule = _flat_rule(q.a.normalize(), fieldname)
+    b = _flat_rule(q.b.normalize(), fieldname)
+    rule.rboost *= float(q.boost)
+    b_rows = [(t, slot, 0.0, g, gr) for t, slot, _lb, g, gr in b.pos]
+    if isinstance(q, Q.AndNot):
+        rule.neg, rule.neg_required, rule.neg_slop = b_rows, b.n_required, b.slop
+    else:
+        rule.req, rule.req_required, rule.req_slop = b_rows, b.n_required, b.slop
+    return rule
 
-    Rules the flat/grouped tier cannot shape (3+-level trees, inner
-    boost/minmatch/scale/tiebreak, duplicate terms, inner
-    AndNot/AndMaybe/Require/DisMax) fall back to the DEEP path: the
-    whole rule — b-sides included — compiles to one post-order program
-    (``_deep_rule``), ``prog`` is that instruction list, every leaf
-    (scoring or not) rides a role-0 row, and the other slots are inert
-    (n_required=0, boost 1.0 — the program carries all boosts). Only
-    trees mixing a positional a/b side (Phrase) with a deep boolean
-    side exceed both tiers and still raise -> ``percolate()``."""
-    if isinstance(q, (Q.AndNot, Q.Require)):
-        try:
-            pos_rows, n_req, a_boost, slop, coord = _flat_rule(
-                name, q.a.normalize(), fieldname)
-            b_rows, b_req, b_boost, b_slop, _b_coord = _flat_rule(
-                name, q.b.normalize(), fieldname)
-        except ValueError:
-            leaves, prog = _deep_rule(name, q, fieldname)
-            pos_rows = [(t, qi, lb, 0, 1) for t, qi, lb in leaves]
-            return (pos_rows, 0, 1.0, None, None,
-                    [], None, None, [], None, None, prog)
-        del b_boost, _b_coord  # b is a pure match set; scores/boosts/coord unused
-        # b rows keep their (group, group_req) labels: the b-side match
-        # predicate is the same satisfied-group count the a-side uses
-        # (>= b_req groups satisfied), so TWO-LEVEL b trees ride the
-        # identical machinery — the executor's left_anti/left_semi
-        # compile b fully, and sat-count == its match set by the same
-        # argument as the a-side
-        b = [(t, pos, g, gr) for t, pos, _lb, g, gr in b_rows]
-        rboost = a_boost * float(q.boost)
-        if isinstance(q, Q.AndNot):
-            return (pos_rows, n_req, rboost, slop, coord,
-                    b, b_req, b_slop, [], None, None, None)
-        return (pos_rows, n_req, rboost, slop, coord,
-                [], None, None, b, b_req, b_slop, None)
+
+def _kernel_rule(q: Q.Query, fieldname: str) -> _Rule:
+    """Compile one normalized rule for the kernel — flat/grouped rows
+    first, else a deep program — or raise ``_NotKernel``."""
     try:
-        pos_rows, n_req, rboost, slop, coord = _flat_rule(name, q, fieldname)
-    except ValueError:
-        leaves, prog = _deep_rule(name, q, fieldname)
-        pos_rows = [(t, qi, lb, 0, 1) for t, qi, lb in leaves]
-        return (pos_rows, 0, 1.0, None, None,
-                [], None, None, [], None, None, prog)
-    return (pos_rows, n_req, rboost, slop, coord,
-            [], None, None, [], None, None, None)
+        rule = _grouped_rule(q, fieldname)
+    except _NotKernel:
+        rule = _deep_rule(q, fieldname)
+    # the (q, group, group_req) pack budgets 24/12/12 bits — far beyond
+    # any real rule
+    if any(r[1] >= 16777216 or r[3] >= 4096 or r[4] >= 4096
+           for r in rule.pos + rule.neg + rule.req):
+        raise _NotKernel("beyond the 24/12/12-bit pack")
+    return rule
 
 
 def percolate_indexed(
@@ -413,9 +454,12 @@ def percolate_indexed(
     fieldname: str = "text",
     weighting=None,
 ) -> DataFrame:
-    """See :func:`_percolate_indexed_with_ix` (kernel + full doc) — this
-    wrapper is the public batch surface; the per-batch index handle stays
-    internal (the stream tier unpersists it after each micro-batch)."""
+    """Large-rule-set percolation -> (query_name, doc_id, score), the
+    same rows as :func:`percolate` for every rule. Kernel rules (see the
+    module docstring) ride ONE broadcast-rule kernel whose plan size is
+    O(1) in the rule count; the rest take ``percolate`` plan branches
+    over the same per-batch index, scored with ``weighting`` (BM25F by
+    default; final()-hook weightings raise)."""
     df, _ix = _percolate_indexed_with_ix(
         spark, docs, queries, schema, fieldname, weighting)
     return df
@@ -429,124 +473,75 @@ def _percolate_indexed_with_ix(
     fieldname: str = "text",
     weighting=None,
 ):
-    """Large-rule-set percolation: the rule set as DATA, not plan branches.
+    """:func:`percolate_indexed` plus its persisted per-batch index (None
+    when there are no rules), for callers that release it after use."""
+    w = _kernel_weighting(weighting)
+    if not queries:
+        return _empty(spark), None
+    kernel, branches = {}, {}
+    for name, q in queries.items():
+        try:
+            kernel[name] = _kernel_rule(q.normalize(), fieldname)
+        except _NotKernel:
+            branches[name] = q
+    ix = build_index(spark, docs, schema or documents_schema()).persist()
+    parts = []
+    if kernel:
+        parts.append(_kernel(spark, ix, kernel, fieldname, w))
+    if branches:
+        parts.append(_plan_branches(ix, branches, weighting=w))
+    return reduce(DataFrame.unionByName, parts), ix
+
+
+def _kernel(spark, ix, rules: dict[str, _Rule], fieldname: str, w) -> DataFrame:
+    """The rule set as DATA, not plan branches.
 
     ``percolate`` compiles one plan branch per rule — right for tens of
     rules, but a 10,000-rule monitoring set would build a 10,000-branch
-    union and choke the optimizer. This tier is the classic term->query
-    inverted index over the RULES: flatten every (flat Term / And / Or)
-    rule into (query_name, term, pos, leaf_boost, n_required) rows, score
-    every distinct rule term over the batch postings in ONE scan (the
-    executor's expanded-Or shape: literal term->idf map, per-posting
-    score expression), broadcast-join the rule-term rows onto the scored
-    postings, and close each (rule, doc) group with the SAME
-    query-ordered left-associative score fold the executor uses — so the
-    output is BIT-IDENTICAL to percolate()/Searcher.compile for these
-    rule shapes (pinned in tests/test_percolate.py). Plan size is O(1)
-    in the rule count; rule rows ride a broadcast.
+    union and choke the optimizer. This kernel is the classic
+    term->query inverted index over the RULES: every rule's leaves
+    become (query_name, term, slot, leaf_boost, role, group, group_req)
+    rows carrying the rule's ``_RULE_COLS``; every distinct rule term is
+    scored over the batch postings in ONE scan (per-term idf rides in the
+    rule rows, per-posting score expression); the rule rows
+    broadcast-join onto the scored postings; and each (rule, doc) group
+    closes with the SAME query-ordered left-associative score fold the
+    executor uses — so the output is BIT-IDENTICAL to
+    percolate()/Searcher.compile (pinned in tests/test_percolate.py).
 
     AND rules require all terms (a zero-df term correctly makes the rule
-    unmatchable); OR rules honor ``minmatch``. ``Phrase`` rules (any
-    slop/boost) ride the same broadcast with word-indexed rows: their
-    positions decode only when a phrase rule exists and only ON the
-    phrase rows, and the positional chain closes inside the same
-    (rule, doc) group with the executor's exact ``_phrase_step`` fold —
-    still O(1) plan size; duplicate words are distinct slots, so they
-    join the same posting once per slot like the executor's self-joins.
-    ``AndNot(a, b)`` and ``Require(a, b)`` take flat OR Phrase b-sides
-    (a may be a phrase): b's terms ride the same broadcast as
-    non-scoring NEGATIVE / REQUIRE rows with word slots, and the group
-    filter excludes docs where b matches (hit count >= b_required, plus
-    b's own positional chain when b is a phrase — the left_anti
-    semantics) or demands a b match (left_semi). ``Or(scale=)`` coord
-    weighting rides two more broadcast columns: the group's summed score
-    is multiplied by (1-s) + s*matched/n_children with the executor's
-    exact expression order, still bit-identical to ``percolate()``.
-    TWO-LEVEL trees ride the same grouped-leaf broadcast (see
-    _flat_rule): And-of-(Term|Or-of-Terms) and Or-of-(Term|And-of-Terms)
-    — each top-level child is a group with its own req, the rule matches
-    on the satisfied-group count, and a leaf scores iff its group is
-    satisfied, all bit-identical to ``percolate()``. ARBITRARY-DEPTH
-    boolean trees — And / Or(minmatch=, scale=) / DisjunctionMax
-    (tiebreak=) / AndMaybe / AndNot / Require / Term at any depth, with
-    boosts on ANY node and duplicate terms allowed — compile to a
-    post-order program evaluated by a stack machine inside the same
-    grouped scan (``_deep_rule`` / ``deep_eval``), still O(1) plan size
-    and bit-identical to ``percolate()``; the program columns are added
-    to the broadcast only when a deep rule is present, so the flat-rule
-    hot path is unchanged, and a min-present-leaves bound
-    (``_deep_min_leaves``) skips the program eval for groups that
-    cannot satisfy the root. Broadcast sizing at scale: each DEEP
-    rule's program rides on its own leaf rows only (~50 B/instruction x
-    leaves), so even a pathological 100k-deep-rule set stays a
-    few-hundred-MB broadcast; flat rules carry a null program (1 byte).
-    Only rules mixing positional sides (Phrase) with deep boolean
-    sides, plus Not/Otherwise and non-Term leaves (ranges, wildcards),
-    still raise — route those through ``percolate``.
+    unmatchable); OR rules honor ``minmatch`` and ``scale`` (the coord
+    factor with the executor's exact expression order). Phrase positions
+    decode only when a phrase rule exists and only ON the phrase rows;
+    the positional chain closes inside the (rule, doc) group with the
+    executor's exact ``_phrase_step`` fold. AndNot/Require b rows are
+    non-scoring NEGATIVE / REQUIRE rows; the group filter excludes docs
+    where b matches (the left_anti semantics) or demands a b match
+    (left_semi). Two-level rules scan their groups (``group_scan``);
+    deep rules run their program (``deep_eval``) only on groups that
+    hold ``_deep_min_leaves`` present leaves. Broadcast sizing at scale:
+    each DEEP rule's program rides on its own leaf rows only
+    (~50 B/instruction x leaves), so even a pathological 100k-deep-rule
+    set stays a few-hundred-MB broadcast.
     """
-    from whoosh_spark.search.scoring import BM25F
-
-    w = weighting or BM25F()
-    if getattr(w, "use_final", False):
-        raise ValueError("final()-hook weightings are per-result-set; "
-                         "use percolate()")
     # roles: 0 = scoring positive row, 1 = negative (AndNot.b),
     # 2 = require (Require.b); neg/req rows never contribute score.
     # Phrase rules ride the same rows with ``_slop`` set — their
     # positional chain closes inside the same (rule, doc) group. A
-    # phrase B-SIDE rides its role's rows with ``_nsl``/``_rsl`` set and
-    # word slots in ``_q``, closing its own chain the same way.
+    # phrase B-SIDE rides its role's rows with ``_neg_slop``/``_req_slop``
+    # set and word slots in ``_q``, closing its own chain the same way.
+    any_phrase = any(s is not None for r in rules.values()
+                     for s in (r.slop, r.neg_slop, r.req_slop))
+    deep_cols = _DEEP_COLS if any(r.deep for r in rules.values()) else ()
+    cols = _RULE_COLS + deep_cols
     rows = []
-    any_phrase = False
-    any_deep = False
-    for name, q in queries.items():
-        (pos, n_req, rboost, slop, coord, neg, neg_req, neg_slop,
-         req, req_req, req_slop, prog) = _flat_rule_full(
-            name, q.normalize(), fieldname)
-        any_phrase = any_phrase or any(
-            s is not None for s in (slop, neg_slop, req_slop))
-        any_deep = any_deep or prog is not None
-        # deep-rule prune bound: groups holding fewer present leaf slots
-        # than the root can possibly be satisfied with skip the program
-        # eval entirely (and the null result filters them — a pure prune)
-        minl = _deep_min_leaves(q.normalize()) if prog is not None else 0
-        scale, n_children = coord if coord is not None else (None, None)
-        # flat-rule fast path: when every group is a singleton with
-        # req 1 (all flat Term/And/Or and Phrase rules), satisfied-group
-        # count == plain row count and the grouped total == the plain
-        # ordered fold — the kernel then skips the struct-accumulator
-        # group scan entirely, so the 100k-flat-rule hot case pays
-        # exactly the pre-grouping cost. Deep rules mark a_flat too:
-        # their score/match comes from the program stack machine, so
-        # the group scan must not run for them either.
-        a_flat = (prog is not None
-                  or (all(r[4] == 1 for r in pos)
-                      and len({r[3] for r in pos}) == len(pos)))
-        n_flat = (all(r[3] == 1 for r in neg)
-                  and len({r[2] for r in neg}) == len(neg))
-        r_flat = (all(r[3] == 1 for r in req)
-                  and len({r[2] for r in req}) == len(req))
-        base_cols = (n_req, neg_req, req_req, rboost, slop, neg_slop,
-                     req_slop, scale, n_children, a_flat, n_flat, r_flat,
-                     prog is not None, prog, minl)
-        for t, pos_i, lboost, grp, grp_req in pos:
-            rows.append((name, t, pos_i, lboost, 0, grp, grp_req) + base_cols)
-        for t, slot, grp, grp_req in neg:
-            rows.append((name, t, slot, 0.0, 1, grp, grp_req) + base_cols)
-        for t, slot, grp, grp_req in req:
-            rows.append((name, t, slot, 0.0, 2, grp, grp_req) + base_cols)
-    if any(r[2] >= 16777216 or r[5] >= 4096 or r[6] >= 4096 for r in rows):
-        # the (q, group, group_req) pack budgets 24/12/12 bits — far
-        # beyond any real rule (a 4096-leaf standing query belongs on
-        # the plan-branch tier anyway)
-        raise ValueError("rule too large for percolate_indexed "
-                         "(>16M leaves or >4095 groups/group-req); "
-                         "use percolate()")
-    if not rows:
-        return (spark.createDataFrame(
-            [], "query_name string, doc_id long, score double"), None)
+    for name, rule in rules.items():
+        per_rule = tuple(getattr(rule, a) for a, _, _ in cols)
+        for role, role_rows in enumerate((rule.pos, rule.neg, rule.req)):
+            for t, slot, lboost, grp, grp_req in role_rows:
+                rows.append((name, t, slot, lboost, role, grp, grp_req)
+                            + per_rule)
 
-    ix = build_index(spark, docs, schema or documents_schema()).persist()
     fs = ix.schema[fieldname]
     avgdl = ix.avg_field_length(fieldname)
     all_terms = sorted({r[1] for r in rows})
@@ -558,8 +553,7 @@ def _percolate_indexed_with_ix(
             idf[t] = float(w.term_scalar(
                 fs, ix.doc_count, dfreq, ix.frequency(fieldname, t)))
     if not idf:
-        return (spark.createDataFrame(
-            [], "query_name string, doc_id long, score double"), ix)
+        return _empty(spark)
 
     # per-term idf rides INSIDE the broadcast rule rows (no literal-map
     # size ceiling: a 100k-rule set is still one small broadcast).
@@ -569,27 +563,11 @@ def _percolate_indexed_with_ix(
     )
     p = ix.terms_postings(fieldname, sorted(idf),
                           positions=any_phrase).select(*pcols)
-    # the two deep-path columns (_deep flag + the broadcast program) are
-    # added ONLY when some rule actually went deep — the flat-rule hot
-    # path's broadcast, agg, and plan stay byte-identical otherwise
-    deep_schema = (
-        ", _deep boolean, _prog array<struct<"
-        "op:int,n:int,q:bigint,boost:double,mm:int,scale:double>>, "
-        "_minl int"
-        if any_deep else ""
-    )
     rules_df = spark.createDataFrame(
-        [(n, t, q_, lb, role, g, gr, nr, ngr, rqr, rb, sl, nsl, rsl, sc, nch,
-          af, nf, rf) + ((dp, pg, ml) if any_deep else ()) + (idf[t],)
-         for (n, t, q_, lb, role, g, gr, nr, ngr, rqr, rb, sl, nsl, rsl, sc,
-              nch, af, nf, rf, dp, pg, ml) in rows if t in idf],
+        [r + (idf[r[1]],) for r in rows if r[1] in idf],
         "query_name string, term string, _q int, _lboost double, _role int, "
         "_grp int, _grp_req int, "
-        "_n_required int, _neg_required int, _req_required int, "
-        "_rboost double, _slop int, _neg_slop int, _req_slop int, "
-        "_scale double, _n_children double, "
-        "_aflat boolean, _nflat boolean, _rflat boolean"
-        + deep_schema + ", _idf double",
+        + "".join(f"_{a} {typ}, " for a, typ, _ in cols) + "_idf double",
     )
     base = w.score_expr(fs, F.col("_idf"), avgdl, F.col("weight"), F.col("dl"))
     # positions ride ONLY on rows whose role participates in a positional
@@ -613,17 +591,12 @@ def _percolate_indexed_with_ix(
     packed_q = (F.col("_q").cast("long") * F.lit(16777216)
                 + F.col("_grp").cast("long") * F.lit(4096)
                 + F.col("_grp_req").cast("long"))
-    jcols = [
-        "query_name", "doc_id", packed_q.alias("_q"), F.col("_role"),
-        F.col("_n_required"), F.col("_neg_required"), F.col("_req_required"),
-        F.col("_rboost"), F.col("_slop"), F.col("_neg_slop"),
-        F.col("_req_slop"), F.col("_scale"), F.col("_n_children"),
-        F.col("_aflat"), F.col("_nflat"), F.col("_rflat"),
-        (base * F.col("_lboost")).alias("score"),
-        pos_col.alias("_pos"),
-    ]
-    if any_deep:
-        jcols += [F.col("_deep"), F.col("_prog"), F.col("_minl")]
+    jcols = (
+        ["query_name", "doc_id", packed_q.alias("_q"), F.col("_role")]
+        + [F.col(f"_{a}") for a, _, _ in _RULE_COLS]
+        + [(base * F.col("_lboost")).alias("score"), pos_col.alias("_pos")]
+        + [F.col(f"_{a}") for a, _, _ in deep_cols]
+    )
     j = p.join(F.broadcast(rules_df), "term").select(*jcols)
     # the executor's _ordered_sum: left-assoc fold in query order, so a
     # 2-term AND scores bit-identically to Searcher.compile(And([...]));
@@ -646,21 +619,7 @@ def _percolate_indexed_with_ix(
         .agg(role_items(0).alias("_items"),
              role_items(1).alias("_nitems"), role_items(2).alias("_ritems"),
              n_role(0).alias("_n"), n_role(1).alias("_neg"), n_role(2).alias("_hasreq"),
-             F.first("_n_required").alias("_req"),
-             F.first("_neg_required").alias("_negr"),
-             F.first("_req_required").alias("_reqr"),
-             F.first("_rboost").alias("_rb"),
-             F.first("_slop").alias("_sl"),
-             F.first("_neg_slop").alias("_nsl"),
-             F.first("_req_slop").alias("_rsl"),
-             F.first("_scale").alias("_sc"),
-             F.first("_n_children").alias("_nch"),
-             F.first("_aflat").alias("_aflat"),
-             F.first("_nflat").alias("_nflat"),
-             F.first("_rflat").alias("_rflat"),
-             *([F.first("_deep").alias("_deep"),
-                F.first("_prog").alias("_prog"),
-                F.first("_minl").alias("_minl")] if any_deep else []))
+             *(F.first(f"_{a}").alias(alias) for a, _, alias in cols))
     )
     # grouped-leaf semantics (see _flat_rule): walk the q-sorted items
     # once (each group's leaves are a contiguous DFS run) collecting the
@@ -807,7 +766,7 @@ def _percolate_indexed_with_ix(
         .withColumn("_ngs", F.when(~F.col("_nflat"), group_scan("_nitems")))
         .withColumn("_rgs", F.when(~F.col("_rflat"), group_scan("_ritems")))
     )
-    if any_deep:
+    if deep_cols:
         # the _minl guard prunes the stack-machine eval for groups that
         # cannot satisfy the rule's root (fewer present leaf slots than
         # _deep_min_leaves' bound); the null _dres then fails the match
@@ -861,12 +820,10 @@ def _percolate_indexed_with_ix(
         return slop_col.isNull() | (F.size(chain) > 0)
 
     phrase_ok = chain_ok("_items", F.col("_sl"))
-    # b-side MATCH predicates: a flat b matches on its hit-count
-    # threshold alone; a phrase b additionally demands its own surviving
-    # chain. AndNot keeps docs where b does NOT match; Require keeps
-    # docs where it does.
-    # b matches on its satisfied-group count (== plain hit count for
-    # flat/phrase b, group-aware for two-level b) plus its chain
+    # b-side MATCH predicates: b matches on its satisfied-group count
+    # (== plain hit count for flat/phrase b, group-aware for two-level b)
+    # plus, for a phrase b, its own surviving chain. AndNot keeps docs
+    # where b does NOT match; Require keeps docs where it does.
     neg_sat = F.when(F.col("_nflat"), F.col("_neg")) \
                .otherwise(F.col("_ngs")["nsat"].cast("long"))
     req_sat = F.when(F.col("_rflat"), F.col("_hasreq")) \
@@ -877,7 +834,7 @@ def _percolate_indexed_with_ix(
         "_ritems", F.col("_rsl"))
     a_match = n_sat >= F.col("_req")
     score_fold = coord_fold
-    if any_deep:
+    if deep_cols:
         # deep rules: the program's root decides match AND score; the
         # flat/grouped predicates stay untouched for everything else
         # (_req is 0 for deep rules, so the flat predicate is inert, but
@@ -886,7 +843,7 @@ def _percolate_indexed_with_ix(
                    .otherwise(a_match)
         score_fold = F.when(F.col("_deep"), F.col("_dres")["s"]) \
                       .otherwise(coord_fold)
-    out = (
+    return (
         grouped.where(
             a_match
             & (F.col("_negr").isNull() | ~neg_matches)
@@ -896,4 +853,3 @@ def _percolate_indexed_with_ix(
         .select("query_name", "doc_id",
                 (score_fold * F.col("_rb")).alias("score"))
     )
-    return out, ix
